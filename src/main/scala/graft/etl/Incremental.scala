@@ -25,7 +25,15 @@ object Incremental {
     * Idempotence invariant (SURVEY.md §5.2): newKeys(newKeys(f, s), s) ==
     * newKeys(f, s); and newKeys(f, s) ∩ s = ∅. */
   def newKeys(fetched: DataFrame, sink: DataFrame, key: String): DataFrame =
-    dedup(fetched, key).join(sink.select(key).distinct(), Seq(key), "left_anti")
+    absentKeys(dedup(fetched, key), sink, key)
+
+  /** Rows of `fetched` whose key is NOT present in `sink`, repeats kept:
+    * for a consumer that only tests keys for membership (a semi-join's
+    * build side), where a dedup would be a shuffle that changes nothing.
+    * The sink side needs no `distinct()` either: a left anti join only
+    * asks whether a key matches. */
+  def absentKeys(fetched: DataFrame, sink: DataFrame, key: String): DataFrame =
+    fetched.join(sink.select(key), Seq(key), "left_anti")
 
   /** O9: cheap emptiness probe (limit-1, not a full count). */
   def isEmpty(df: DataFrame): Boolean = df.isEmpty

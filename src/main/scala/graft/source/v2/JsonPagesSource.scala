@@ -4,12 +4,15 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,7 +30,9 @@ import graft.source.v2.PagedFetch.{Fetchers, PageRequest}
   *
   * Modes, by option:
   *  - `path` (no fetch option): offline — a "page" is a JSON file under
-  *    `path`, one partition per page;
+  *    `path`, one row per page in file-name order; the files are packed
+  *    into byte-sized partitions by Spark's `FilePartition` rule
+  *    ([[PagesScanBuilder.packFiles]]), never split;
   *  - `fetcher` + `mode=pages`: live pagination — ONE partition whose
   *    reader follows `nextPageToken` until absent (sequential by nature:
   *    each token comes from the previous response), one output row per
@@ -83,9 +88,10 @@ private[v2] class PagesScanBuilder(props: Map[String, String])
   override def toBatch: Batch = this
 
   /** The pagination unit becomes the parallelism unit: one partition per
-    * page file (offline), per id-chunk (parallel lookups), or per
-    * page-token STREAM (the sequential token loop is one partition; many
-    * streams would be many partitions).
+    * id-chunk (parallel lookups) or per page-token STREAM (the sequential
+    * token loop is one partition; many streams would be many partitions).
+    * Offline page files are local reads, so there a partition is a run of
+    * files sized like a file-scan split, not one file.
     *
     * The fetch itself is described by a serializable [[FetchSpec]]:
     * `fetcher` resolves a registered (test/local) fetch by name; `url`
@@ -125,15 +131,53 @@ private[v2] class PagesScanBuilder(props: Map[String, String])
       case None =>
         val dir = Paths.get(props.getOrElse("path", ""))
         if (!Files.isDirectory(dir)) Array.empty
-        else Files.list(dir).iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".json"))
-          .toArray.sortBy(_.getFileName.toString)
-          .map(p => PagePartition(p.toString): InputPartition)
+        else {
+          val listing = Files.list(dir)
+          val files = try listing.iterator().asScala
+            .filter(p => p.getFileName.toString.endsWith(".json"))
+            .toArray.sortBy(_.getFileName.toString)
+            .map(p => p.toString -> Files.size(p))
+          finally listing.close()
+          val conf = SQLConf.get
+          PagesScanBuilder.packFiles(files, conf.filesMaxPartitionBytes,
+            conf.filesOpenCostInBytes, conf.filesMinPartitionNum.getOrElse(
+              SparkSession.active.sparkContext.defaultParallelism))
+            .map(PagesPartition(_): InputPartition)
+        }
     }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PagesReaderFactory
+}
+
+private[v2] object PagesScanBuilder {
+
+  /** Spark's `FilePartition` packing over whole files kept in input order:
+    * each file costs its size plus `openCost`, a partition closes when the
+    * next file would take it past `maxSplitBytes = min(maxPartitionBytes,
+    * max(openCost, totalCost / minPartitions))`. A file larger than that
+    * gets a partition of its own. */
+  def packFiles(files: Seq[(String, Long)], maxPartitionBytes: Long,
+      openCost: Long, minPartitions: Int): Array[Seq[String]] = {
+    val total = files.iterator.map(_._2 + openCost).sum
+    val maxSplit = math.min(maxPartitionBytes,
+      math.max(openCost, total / minPartitions))
+    val parts = ArrayBuffer.empty[Seq[String]]
+    var current = Vector.empty[String]
+    var size = 0L
+    files.foreach { case (file, len) =>
+      if (current.nonEmpty && size + len > maxSplit) {
+        parts += current
+        current = Vector.empty
+        size = 0L
+      }
+      current :+= file
+      size += len + openCost
+    }
+    if (current.nonEmpty) parts += current
+    parts.toArray
+  }
 }
 
 /** How a partition obtains its Fetch, resolved/constructed EXECUTOR-side:
@@ -149,7 +193,7 @@ private[v2] sealed trait FetchSpec extends Serializable {
 private[v2] case class RegistryFetch(name: String) extends FetchSpec
 private[v2] case class HttpFetchSpec(endpoint: HttpEndpoint) extends FetchSpec
 
-private[v2] case class PagePartition(file: String) extends InputPartition
+private[v2] case class PagesPartition(files: Seq[String]) extends InputPartition
 private[v2] case class TokenStreamPartition(spec: FetchSpec, maxPages: Int,
     retries: Int, backoffMs: Long) extends InputPartition
 private[v2] case class ChunkPartition(spec: FetchSpec, ids: Seq[String],
@@ -158,7 +202,9 @@ private[v2] case class ChunkPartition(spec: FetchSpec, ids: Seq[String],
 private[v2] class PagesReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case PagePartition(file) => new PageReader(file)
+      case PagesPartition(files) =>
+        new IteratorReader(files.iterator.map(f =>
+          new String(Files.readAllBytes(Paths.get(f)), StandardCharsets.UTF_8)))
       case TokenStreamPartition(spec, maxPages, retries, backoff) =>
         new IteratorReader(PagedFetch.followPages(
           PagedFetch.withRetry(spec.fetch, retries, backoff), maxPages))
@@ -169,28 +215,9 @@ private[v2] class PagesReaderFactory extends PartitionReaderFactory {
     }
 }
 
-/** Offline reader: the fetch seam is a file read (one page per file). */
-private[v2] class PageReader(file: String)
-    extends PartitionReader[InternalRow] {
-  private var consumed = false
-  private var page: String = _
-
-  private def fetch(): String =
-    new String(Files.readAllBytes(Paths.get(file)), StandardCharsets.UTF_8)
-
-  override def next(): Boolean =
-    if (consumed) false
-    else { page = fetch(); consumed = true; true }
-
-  override def get(): InternalRow =
-    InternalRow(UTF8String.fromString(page))
-
-  override def close(): Unit = ()
-}
-
-/** Live reader: one row per fetched page/chunk; the iterator is lazy, so
-  * each next() performs (at most) one fetch — pages stream through rather
-  * than buffering the whole pagination in memory. */
+/** One row per page file or fetched page/chunk; the iterator is lazy, so
+  * each next() performs (at most) one read or fetch — pages stream through
+  * rather than buffering the whole partition in memory. */
 private[v2] class IteratorReader(pages: Iterator[String])
     extends PartitionReader[InternalRow] {
   private var page: String = _

@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Dataset
+
 import graft.SparkTestBase
 
 /** Golden e2e (SURVEY.md §5.4): canned YouTube API JSON (FIXTURES.md §A
@@ -91,6 +93,62 @@ class PipelineSpec extends SparkTestBase {
     assert(r2.newVideos == 0)
     assert(spark.read.parquet(s"$sink/video_stats").count() == 3)
     assert(spark.read.parquet(s"$sink/channel_stats").count() == 2)
+  }
+
+  private def newSink(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  // v1 again, as a retried fetch delivers it: the same video with newer
+  // counters
+  private val resentPage =
+    """{"items": [
+      {"id": "v1",
+       "snippet": {"channelTitle": "Chan A", "title": "First",
+                   "description": "hello world", "tags": ["a", "b"],
+                   "publishedAt": "2024-03-05T10:20:30Z"},
+       "statistics": {"likeCount": "12", "viewCount": "1100",
+                      "commentCount": "5", "favoriteCount": "0"},
+       "contentDetails": {"duration": "PT1H2M10S"}}
+    ]}"""
+
+  test("a re-sent video page lands each new id exactly once") {
+    val runs = Seq(videoPages :+ resentPage, resentPage +: videoPages).map {
+      pages =>
+        val sink = newSink("resent_sink_")
+        val r = Pipeline.run(spark, channelPages.toDS(), playlistPages.toDS(),
+          pages.toDS(), sink)
+        val vs = spark.read.parquet(s"$sink/video_stats")
+        (r.newVideos, vs.count(), vs.select("videoId").distinct().count(),
+          vs.filter("videoId = 'v1'").select("views", "likes")
+            .as[(Long, Long)].collect().toSeq)
+    }
+    assert(runs.head._1 == 3 && runs.head._2 == 3 && runs.head._3 == 3)
+    assert(runs.last == runs.head, "the kept copy must not depend on page order")
+  }
+
+  test("a file: URI sink is seen on the rerun: no second append") {
+    val sink = s"file:${newSink("uri_sink_")}"
+    val r1 = Pipeline.run(spark, channelPages.toDS(), playlistPages.toDS(),
+      videoPages.toDS(), sink)
+    val r2 = Pipeline.run(spark, channelPages.toDS(), playlistPages.toDS(),
+      videoPages.toDS(), sink)
+    assert(r1.newVideos == 3 && r2.newVideos == 0)
+    assert(spark.read.parquet(s"$sink/video_stats").count() == 3)
+  }
+
+  test("a run releases the new-id set it materialized") {
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    def run(videos: Dataset[String], sink: String) = Pipeline.run(spark,
+      channelPages.toDS(), playlistPages.toDS(), videos, sink)
+    val before = cached
+    val sink = newSink("cache_sink_")
+    assert(run(videoPages.toDS(), sink).newVideos == 3) // appends
+    assert(cached == before)
+    assert(run(videoPages.toDS(), sink).newVideos == 0) // zero-delta rerun
+    assert(cached == before)
+    val failing = Seq("page").toDS().map[String](_ => sys.error("fetch failed"))
+    intercept[Exception](run(failing, newSink("cache_fail_"))) // append throws
+    assert(cached == before)
   }
 
   test("source fan-out and dedup: 4 playlist-page rows → 3 distinct ids") {

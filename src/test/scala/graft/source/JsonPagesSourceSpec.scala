@@ -2,6 +2,9 @@ package graft.source
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, spark_partition_id}
+
 import graft.SparkTestBase
 import graft.source.v2.{JsonPagesSource, PagedFetch}
 
@@ -19,12 +22,61 @@ class JsonPagesSourceSpec extends SparkTestBase {
     d
   }
 
-  test("DSv2 source: one row and one partition per page") {
-    val df = spark.read.format(JsonPagesSource.Name)
-      .option("path", dir).load()
-    assert(df.count() == 2)
-    assert(df.rdd.getNumPartitions == 2,
-      "each page must be its own InputPartition (parallel fetch unit)")
+  /** A fresh directory of page files, written in reverse name order so a
+    * listing in creation order would show. */
+  private def pageDir(prefix: String, pages: Seq[(String, String)]): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    pages.reverse.foreach { case (name, body) =>
+      Files.writeString(Paths.get(s"$d/$name"), body)
+    }
+    d
+  }
+
+  private def load(dir: String): DataFrame =
+    spark.read.format(JsonPagesSource.Name).option("path", dir).load()
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("DSv2 source: one row per page, in file-name order") {
+    val d = pageDir("order_", Seq("b.json" -> "B", "a.json" -> "A",
+      "c.json" -> "C", "notes.txt" -> "skipped"))
+    import spark.implicits._
+    assert(load(d).as[String].collect().toSeq == Seq("A", "B", "C"))
+  }
+
+  test("40 small pages pack into at most defaultParallelism partitions") {
+    val pages = (0 until 40).map(i => f"p$i%02d.json" -> f"""{"n": $i%02d}""")
+    val df = load(pageDir("packed_", pages))
+    val n = df.rdd.getNumPartitions
+    assert(n <= spark.sparkContext.defaultParallelism, s"$n partitions")
+    import spark.implicits._
+    assert(df.as[String].collect().toSeq == pages.map(_._2))
+  }
+
+  test("a page above maxPartitionBytes gets a partition of its own") {
+    val small = (i: Int) => s"""{"n": $i, "pad": "${"x" * 80}"}"""
+    val big = s"""{"pad": "${"y" * 5000}"}"""
+    val pages = (0 until 5).map(i => s"a$i.json" -> small(i)) ++
+      Seq("b.json" -> big) ++
+      (0 until 5).map(i => s"c$i.json" -> small(i))
+    val d = pageDir("split_", pages)
+    val parts = withConf("spark.sql.files.maxPartitionBytes" -> "1000",
+        "spark.sql.files.openCostInBytes" -> "10") {
+      load(d).select(spark_partition_id().as("p"), col("value"))
+        .collect().groupBy(_.getInt(0)).values
+        .map(_.map(_.getString(1)).toSeq).toSeq
+    }
+    assert(parts.filter(_.contains(big)) == Seq(Seq(big)))
+    assert(parts.size < pages.size, "the small pages around it still pack")
+    assert(parts.map(_.size).sum == pages.size)
   }
 
   test("pages flow into the YouTubeSource flatten (end-to-end O3)") {
