@@ -3,62 +3,42 @@ package graft.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumn
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.ImperativeAggregate
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Bounded top-k buffer: ≤ k (sim, id) entries kept sorted by
-  * (sim DESC, id ASC) — the exact ordering of the row_number window it
-  * replaces. Insertion is a linear shift over ≤ k slots (k is small by
-  * contract: a kNN fan-out), so update cost is O(k) worst case and O(1)
-  * for the common reject (sim worse than the current k-th). */
-final class TopKNeighborsBuf(val k: Int) {
-  val sims = new Array[Double](k)
-  val ids = new Array[Long](k)
-  var n = 0
-  // Spark's SQL double ordering, not IEEE '>': NaN sorts GREATEST (so a
-  // NaN sim ranks first, exactly like the row_number window this
-  // aggregate replaces — r14 ADVICE) and -0.0 == 0.0 (Spark normalizes
-  // signed zeros before comparison). java.lang.Double.compare gives the
-  // NaN total order; the zero-fold handles ±0.0.
-  @inline private def cmpSim(a: Double, b: Double): Int =
-    java.lang.Double.compare(if (a == 0.0) 0.0 else a,
-      if (b == 0.0) 0.0 else b)
-  @inline private def better(s: Double, id: Long, i: Int): Boolean = {
-    val c = cmpSim(s, sims(i))
-    c > 0 || (c == 0 && id < ids(i))
-  }
-  def insert(s: Double, id: Long): Unit = {
-    if (n == k && !better(s, id, k - 1)) return
-    var pos = if (n == k) k - 1 else n
-    if (n < k) n += 1
-    while (pos > 0 && better(s, id, pos - 1)) {
-      sims(pos) = sims(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
-    }
-    sims(pos) = s; ids(pos) = id
-  }
-  def mergeWith(o: TopKNeighborsBuf): Unit = {
-    var i = 0
-    while (i < o.n) { insert(o.sims(i), o.ids(i)); i += 1 }
-  }
-}
+import graft.expr.VectorKernels.cmpSim
 
-/** Typed-imperative top-k-neighbors aggregate: the map-side-bounded
-  * replacement for `row_number().over(partitionBy(q).orderBy(sim DESC,
-  * id ASC)) <= k` on an n·|collection| sim stream. The window form
-  * (even with Spark 4's WindowGroupLimit) sorts every partition's sim
-  * rows before limiting; this aggregate keeps a k-slot insertion buffer
-  * per group, so the partial phase is one O(k) probe per row with no
-  * sort, and the exchange carries one ≤ k-entry buffer per (task,
-  * group). Emits array<struct<sim double, neighbor_id long>> in (sim
-  * DESC, id ASC) order — posexplode to recover (rn, neighbor, sim). */
+/** Top-k-neighbors aggregate: the map-side-bounded replacement for
+  * `row_number().over(partitionBy(q).orderBy(sim DESC, id ASC)) <= k` on
+  * an n·|collection| sim stream. The window form (even with Spark 4's
+  * WindowGroupLimit) sorts every partition's sim rows before limiting;
+  * this aggregate keeps a k-slot insertion buffer per group, so the
+  * partial phase is one O(k) probe per row with no sort, and the
+  * exchange carries one ≤ k-entry buffer per (task, group). Emits
+  * array<struct<sim double, neighbor_id long>> in (sim DESC, id ASC)
+  * order — posexplode to recover (rn, neighbor, sim).
+  *
+  * The buffer is fixed-width columns — an int count `n`, then k sims
+  * and k ids, kept sorted — so Spark plans the aggregate in
+  * `HashAggregateExec` (the precedent is its own `HyperLogLogPlusPlus`).
+  * That operator keeps any number of groups per task in its hash map and
+  * sorts and spills only under memory pressure; an object buffer would
+  * land in `ObjectHashAggregateExec`, which falls back to sort-based
+  * aggregation after 128 groups per task — the per-task sort this
+  * aggregate exists to avoid. The fixed layout costs 2k + 1 buffer
+  * columns per group and an O(k) shift per insertion, so k is bounded by
+  * [[TopKNeighbors.MaxK]]: a kNN fan-out, not a full ranking. */
 case class TopKNeighbors(simChild: Expression, idChild: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKNeighborsBuf] {
-  require(k >= 1 && k <= 65536, "k must be in [1, 65536]")
+  extends ImperativeAggregate {
+  require(k >= 1 && k <= TopKNeighbors.MaxK,
+    s"topk_neighbors: k must be in [1, ${TopKNeighbors.MaxK}], got $k")
 
   override def children: Seq[Expression] = Seq(simChild, idChild)
   override def nullable: Boolean = false
@@ -66,58 +46,78 @@ case class TopKNeighbors(simChild: Expression, idChild: Expression,
     StructField("sim", DoubleType, nullable = false),
     StructField("neighbor_id", LongType, nullable = false))),
     containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     (simChild.dataType, idChild.dataType) match {
-      case (DoubleType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (DoubleType, LongType) => TypeCheckResult.TypeCheckSuccess
       case (s, i) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires (double, bigint), got " +
             s"${s.catalogString}, ${i.catalogString}")
     }
 
-  override def createAggregationBuffer(): TopKNeighborsBuf =
-    new TopKNeighborsBuf(k)
+  // buffer layout relative to the offset: n, sim_0 .. sim_{k-1},
+  // id_0 .. id_{k-1}; slots below n are sorted (sim DESC, id ASC)
+  override val aggBufferAttributes: Seq[AttributeReference] =
+    AttributeReference("n", IntegerType)() +:
+      ((0 until k).map(i => AttributeReference(s"sim$i", DoubleType)()) ++
+        (0 until k).map(i => AttributeReference(s"id$i", LongType)()))
+  override lazy val aggBufferSchema: StructType =
+    DataTypeUtils.fromAttributes(aggBufferAttributes)
+  override lazy val inputAggBufferAttributes: Seq[AttributeReference] =
+    aggBufferAttributes.map(_.newInstance())
 
-  override def update(b: TopKNeighborsBuf, input: InternalRow): TopKNeighborsBuf = {
+  // slots at and above n are never read, so an empty buffer is just n = 0
+  override def initialize(b: InternalRow): Unit =
+    b.setInt(mutableAggBufferOffset, 0)
+
+  /** (s, id) ranks before the entry in slot i of the buffer at `o`. */
+  @inline private def better(b: InternalRow, o: Int, s: Double, id: Long,
+      i: Int): Boolean = {
+    val c = cmpSim(s, b.getDouble(o + 1 + i))
+    c > 0 || (c == 0 && id < b.getLong(o + 1 + k + i))
+  }
+
+  /** Linear-shift insertion; O(1) for the common reject (no better than
+    * the current k-th). */
+  private def insert(b: InternalRow, s: Double, id: Long): Unit = {
+    val o = mutableAggBufferOffset
+    val n = b.getInt(o)
+    if (n == k && !better(b, o, s, id, k - 1)) return
+    var pos = if (n == k) k - 1 else { b.setInt(o, n + 1); n }
+    while (pos > 0 && better(b, o, s, id, pos - 1)) {
+      b.setDouble(o + 1 + pos, b.getDouble(o + pos))
+      b.setLong(o + 1 + k + pos, b.getLong(o + k + pos))
+      pos -= 1
+    }
+    b.setDouble(o + 1 + pos, s)
+    b.setLong(o + 1 + k + pos, id)
+  }
+
+  override def update(b: InternalRow, input: InternalRow): Unit = {
     val s = simChild.eval(input)
     val id = idChild.eval(input)
     if (s != null && id != null)
-      b.insert(s.asInstanceOf[Double], id.asInstanceOf[Long])
-    b
+      insert(b, s.asInstanceOf[Double], id.asInstanceOf[Long])
   }
 
-  override def merge(b: TopKNeighborsBuf, o: TopKNeighborsBuf): TopKNeighborsBuf = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: TopKNeighborsBuf): Any = {
-    val out = new Array[Any](b.n)
+  override def merge(b: InternalRow, in: InternalRow): Unit = {
+    val o = inputAggBufferOffset
+    val n = in.getInt(o)
     var i = 0
-    while (i < b.n) {
-      out(i) = InternalRow(b.sims(i), b.ids(i)); i += 1
+    while (i < n) {
+      insert(b, in.getDouble(o + 1 + i), in.getLong(o + 1 + k + i)); i += 1
+    }
+  }
+
+  override def eval(b: InternalRow): Any = {
+    val o = mutableAggBufferOffset
+    val out = new Array[Any](b.getInt(o))
+    var i = 0
+    while (i < out.length) {
+      out(i) = InternalRow(b.getDouble(o + 1 + i), b.getLong(o + 1 + k + i))
+      i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def serialize(b: TopKNeighborsBuf): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + b.n * 16)
-    bb.putInt(b.n)
-    var i = 0
-    while (i < b.n) { bb.putDouble(b.sims(i)); bb.putLong(b.ids(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKNeighborsBuf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val b = new TopKNeighborsBuf(k)
-    var i = 0
-    // entries arrive already sorted; insert preserves order
-    while (i < n) { b.sims(i) = bb.getDouble; b.ids(i) = bb.getLong; i += 1 }
-    b.n = n
-    b
   }
 
   override def withNewMutableAggBufferOffset(o: Int): TopKNeighbors =
@@ -131,6 +131,10 @@ case class TopKNeighbors(simChild: Expression, idChild: Expression,
 }
 
 object TopKNeighbors {
+  /** Largest k: the buffer is 2k + 1 columns per group, and each
+    * insertion shifts up to k slots. */
+  val MaxK = 1024
+
   /** Column builder: topk_neighbors(sim, id, k) → array<struct<sim,
     * neighbor_id>> ordered (sim DESC, id ASC). */
   def topk_neighbors(sim: Column, id: Column, k: Int): Column =

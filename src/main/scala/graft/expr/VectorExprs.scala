@@ -35,6 +35,15 @@ object VectorKernels {
     else java.lang.Double.valueOf(dot / math.sqrt(na * nb))
   }
 
+  /** Spark's SQL double ordering for sims, not IEEE '>': NaN sorts
+    * GREATEST and -0.0 == 0.0 (Spark normalizes signed zeros before
+    * comparing), so a kernel that ranks by it keeps exactly the row a
+    * `row_number` window over `sim DESC` keeps. `Double.compare` gives
+    * the NaN total order; the zero-fold handles ±0.0. */
+  @inline def cmpSim(a: Double, b: Double): Int =
+    java.lang.Double.compare(if (a == 0.0) 0.0 else a,
+      if (b == 0.0) 0.0 else b)
+
   def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
@@ -122,11 +131,6 @@ case class NearestCentroid(child: Expression,
   @transient private lazy val embArr: Array[Array[Float]] =
     cembs.map(_.toArray).toArray
 
-  /** Spark's SQL double ordering (see TopKNeighborsBuf.cmpSim). */
-  @inline private def cmpSim(a: Double, b: Double): Int =
-    java.lang.Double.compare(if (a == 0.0) 0.0 else a,
-      if (b == 0.0) 0.0 else b)
-
   def nearest(emb: ArrayData): Any = {
     val n = emb.numElements()
     var best = 0L
@@ -149,7 +153,7 @@ case class NearestCentroid(child: Expression,
         if (na != 0.0 && nb != 0.0) {
           val s = dot / math.sqrt(na * nb)
           // strict > keeps the first (lowest-cid) maximum: cid tiebreak
-          if (!found || cmpSim(s, bestSim) > 0) {
+          if (!found || VectorKernels.cmpSim(s, bestSim) > 0) {
             best = cidArr(j); bestSim = s; found = true
           }
         }

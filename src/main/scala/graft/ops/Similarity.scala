@@ -53,65 +53,22 @@ object Similarity {
     cosineTopKUnchecked(collection, queries, k)
   }
 
-  // Shape note (r14 optimization round, measured in tools/KnnProbe at
-  // sf0.1, steady passes): the former row_number window — even with
-  // Spark 4's automatic WindowGroupLimit(partial/final) — sorts every
-  // partition's sim rows before limiting: 5.0–6.3 s on the 4M-row sim
-  // stream whose BNLJ+cosine floor is ~2.0–2.5 s. The typed
-  // [[graft.expr.TopKNeighbors]] aggregate replaces the sort with one
-  // O(k) insertion probe per row (k-slot buffer per group, partial agg
-  // map-side, exchange carries one ≤ k-entry buffer per (task, query)):
-  // 2.7–3.8 s. A two-level collect_list/sort_array/slice form was also
-  // tried and measured WORSE than the window (8–17 s: full-group list
-  // buffering). Ordering is identical to the window — (sim DESC,
-  // neighbor_id ASC) exact-double comparisons — so results match
-  // row-for-row; sim_r is rounded only on output, after ranking.
-  /** Monotonic suffix for the transient global-temp re-bind views
-    * below (unique across concurrent suites sharing one JVM). */
-  private val topKSeq = new java.util.concurrent.atomic.AtomicLong()
-
+  // Shape note: the top-k per query is one partial/final hash aggregate
+  // over a k-slot buffer ([[graft.expr.TopKNeighbors]]) — a local top-k
+  // per task, merged globally (REPOSE's shape). A row_number window,
+  // even with Spark 4's WindowGroupLimit, sorts every partition's sim
+  // rows before limiting; the aggregate does one O(k) insertion probe
+  // per row and the exchange carries one ≤ k-entry buffer per (task,
+  // query). Its buffer is fixed-width, so Spark runs it in
+  // HashAggregateExec, which holds any number of queries per task
+  // without a sort fallback and needs no conf override. Ordering is the
+  // window's — (sim DESC, neighbor_id ASC) under Spark's double
+  // ordering — so results match row-for-row; sim_r is rounded only on
+  // output, after ranking.
   private[graft] def topKFromSims(sims: DataFrame, k: Int): DataFrame = {
-    // TypedImperativeAggregate runs in ObjectHashAggregateExec, which
-    // falls back to SORT-based aggregation after 128 distinct groups
-    // per task (the conservative Spark default) — exactly the per-task
-    // sort this aggregate exists to avoid, and with ~|queries| groups
-    // per task the fallback ALWAYS fires here. The raise is safe for
-    // THIS aggregation (buffers are k-bounded: hash-mode memory is
-    // groups·k·16 bytes) but must never leak to later unbounded object
-    // aggs (collect_list et al.), whose 128-group fallback is a §5
-    // spill guard (r14 ADVICE). A set/restore cannot scope it — the
-    // conf is read at ACTION time, after this function returns — and
-    // eager materialization defeats consumer count-pruning (both
-    // A/B-measured and rejected, r15 notes). So the aggregation is
-    // RE-BOUND into a fresh session that carries the caller's runtime
-    // conf PLUS the raise: the returned frame executes under the
-    // raised threshold while the caller's session keeps the guard.
-    // Scope note: every registered consumer aggregates the k-bounded
-    // output (reciprocity / LID / recall / ranking metrics), so the
-    // raise is safe for the frame's whole downstream here; a NEW
-    // caller composing an UNBOUNDED object-agg buffer downstream of a
-    // top-k should re-bind the result to its own session first.
-    val sp = sims.sparkSession
-    val s2 = sp.newSession()
-    sp.conf.getAll.foreach { case (key, v) =>
-      try s2.conf.set(key, v)
-      catch { case _: Exception => () } // static confs are not settable
-    }
-    s2.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      (1 << 20).toString)
-    // hand the plan across sessions via a transient global temp view;
-    // s2.table resolves (inlines) it eagerly, so the view can be
-    // dropped before returning — no catalog state survives the call
-    val vn = s"graft_topk_rebind_${topKSeq.incrementAndGet()}"
-    sims.createOrReplaceGlobalTempView(vn)
-    val sims2 =
-      try s2.table(s"global_temp.$vn")
-      finally sp.catalog.dropGlobalTempView(vn)
-    val top = sims2.groupBy(col("q_id"))
+    sims.groupBy(col("q_id"))
       .agg(graft.expr.TopKNeighbors.topk_neighbors(
         col("sim"), col("neighbor_id"), k).as("_top"))
-    top
       .select(col("q_id"), posexplode(col("_top")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
         col("col.neighbor_id").as("neighbor_id"),

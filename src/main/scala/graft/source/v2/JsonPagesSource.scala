@@ -30,9 +30,9 @@ import graft.source.v2.PagedFetch.{Fetchers, PageRequest}
   *
   * Modes, by option:
   *  - `path` (no fetch option): offline — a "page" is a JSON file under
-  *    `path`, one row per page in file-name order; the files are packed
-  *    into byte-sized partitions by Spark's `FilePartition` rule
-  *    ([[PagesScanBuilder.packFiles]]), never split;
+  *    `path` (a local path or `file:` URI), one row per page in file-name
+  *    order; the files are packed into byte-sized partitions by Spark's
+  *    `FilePartition` rule ([[PagesScanBuilder.packFiles]]), never split;
   *  - `fetcher` + `mode=pages`: live pagination — ONE partition whose
   *    reader follows `nextPageToken` until absent (sequential by nature:
   *    each token comes from the previous response), one output row per
@@ -129,7 +129,7 @@ private[v2] class PagesScanBuilder(props: Map[String, String])
             throw new IllegalArgumentException(s"unknown mode: $other")
         }
       case None =>
-        val dir = Paths.get(props.getOrElse("path", ""))
+        val dir = PagesScanBuilder.localDir(props.getOrElse("path", ""))
         if (!Files.isDirectory(dir)) Array.empty
         else {
           val listing = Files.list(dir)
@@ -152,6 +152,23 @@ private[v2] class PagesScanBuilder(props: Map[String, String])
 }
 
 private[v2] object PagesScanBuilder {
+
+  private val Scheme = "^([A-Za-z][A-Za-z0-9+.-]*):".r
+
+  /** The local directory an offline `path` names: a bare path as is, a
+    * `file:` URI resolved to its path. Page files are listed and read with
+    * `java.nio`, so any other scheme fails here, naming it, instead of
+    * reading as an empty day. */
+  def localDir(path: String): java.nio.file.Path =
+    Scheme.findFirstMatchIn(path).map(_.group(1)) match {
+      case None => Paths.get(path)
+      case Some(s) if s.equalsIgnoreCase("file") =>
+        Paths.get(new java.net.URI(path))
+      case Some(s) =>
+        throw new IllegalArgumentException(s"JsonPagesSource reads page " +
+          s"files from the local filesystem; scheme '$s' is not supported " +
+          s"(path $path)")
+    }
 
   /** Spark's `FilePartition` packing over whole files kept in input order:
     * each file costs its size plus `openCost`, a partition closes when the

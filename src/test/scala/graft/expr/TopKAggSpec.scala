@@ -1,5 +1,8 @@
 package graft.expr
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+  ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,7 +14,7 @@ import graft.SparkTestBase
   * double ordering sorts NaN greatest, so NaN ranks first) and signed
   * zeros (-0.0 == 0.0 in Spark comparisons — the id tiebreak decides).
   */
-class TopKAggSpec extends SparkTestBase {
+class TopKAggSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def viaWindow(df: org.apache.spark.sql.DataFrame, k: Int) = {
@@ -25,10 +28,13 @@ class TopKAggSpec extends SparkTestBase {
       .toSet
   }
 
-  private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) =
+  private def topK(df: org.apache.spark.sql.DataFrame, k: Int) =
     df.groupBy(col("q_id"))
       .agg(TopKNeighbors.topk_neighbors(col("sim"),
         col("neighbor_id"), k).as("_top"))
+
+  private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) =
+    topK(df, k)
       .select(col("q_id"), posexplode(col("_top")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
         col("col.neighbor_id"), col("col.sim"))
@@ -65,5 +71,47 @@ class TopKAggSpec extends SparkTestBase {
       (q, i.toLong, if (i % 97 == 0) Double.NaN else sim)
     }.toDF("q_id", "neighbor_id", "sim").repartition(8)
     assert(viaAgg(rows, 5) == viaWindow(rows, 5))
+  }
+
+  /** 1 000 queries × 12 neighbors in ONE input partition: the partial
+    * aggregate holds 1 000 groups in one task, far past the 128 at which
+    * an object-buffer aggregate would fall back to sorting. */
+  private lazy val manyGroups = (0 until 12000).map { i =>
+    val sim = ((i * 2654435761L) % 997L).toDouble / 997.0
+    ((i % 1000).toLong, i.toLong, if (i % 89 == 0) Double.NaN else sim)
+  }.toDF("q_id", "neighbor_id", "sim").coalesce(1)
+
+  test("topk_neighbors matches the window with more than 128 groups in " +
+      "one task") {
+    assert(manyGroups.rdd.getNumPartitions == 1)
+    assert(viaAgg(manyGroups, 5) == viaWindow(manyGroups, 5))
+  }
+
+  test("topk_neighbors plans a HashAggregate: no object-hash or sort " +
+      "aggregate, for a wide buffer too") {
+    for (k <- Seq(5, TopKNeighbors.MaxK)) {
+      val df = topK(manyGroups, k)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(collect(plan) { case a: HashAggregateExec => a }.size == 2,
+        s"k = $k: expected partial + final HashAggregate:\n$plan")
+      assert(collect(plan) {
+        case a: ObjectHashAggregateExec => a
+        case a: SortAggregateExec => a
+      }.isEmpty, s"k = $k:\n$plan")
+    }
+  }
+
+  test("k = MaxK (1 024) keeps every neighbor; k = 1 025 is rejected " +
+      "with the bound in the message") {
+    assert(TopKNeighbors.MaxK == 1024)
+    val rows = (0 until 1100).map(i => (1L, i.toLong, (i % 37).toDouble))
+      .toDF("q_id", "neighbor_id", "sim")
+    assert(viaAgg(rows, 1024) == viaWindow(rows, 1024))
+    val e = intercept[IllegalArgumentException] {
+      topK(rows, 1025)
+    }
+    assert(e.getMessage.contains("1024") && e.getMessage.contains("1025"),
+      e.getMessage)
   }
 }

@@ -21,23 +21,18 @@ class SimilaritySpec extends SparkTestBase {
     }
   }
 
-  test("topKFromSims session re-bind: the fallback-threshold raise is " +
-      "scoped to the returned frame — the caller's session keeps the " +
-      "128-group guard and no temp-view state survives the call") {
+  test("top-k runs in the caller's session: no re-bind, conf raise or " +
+      "temp view") {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val before = spark.conf.get(key)
+    val before = spark.conf.getOption(key)
     val queries = emb.filter(col("vec_id") < 3)
     val out = Similarity.cosineTopK(emb, queries, 5)
-    // the returned frame executes under the raised threshold...
-    assert(out.sparkSession.conf.get(key) == (1 << 20).toString)
-    // ...and carries the caller's runtime conf (the re-bind copies it)
-    assert(out.sparkSession.conf.get("spark.sql.shuffle.partitions") ==
-      spark.conf.get("spark.sql.shuffle.partitions"))
-    // the caller's session is untouched and holds no leftover views
-    assert(spark.conf.get(key) == before)
-    assert(!spark.catalog.listTables("global_temp").collect()
-      .exists(_.name.startsWith("graft_topk_rebind")))
+    assert(out.sparkSession eq spark)
     assert(out.count() == 15)
+    assert(spark.conf.getOption(key) == before)
+    // listTables("global_temp") lists local temp views too
+    assert(!spark.catalog.listTables("global_temp").collect()
+      .exists(_.database == "global_temp"))
   }
 
   test("broadcast valve: an oversized query side fails fast with the " +

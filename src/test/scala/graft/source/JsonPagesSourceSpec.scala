@@ -94,6 +94,20 @@ class JsonPagesSourceSpec extends SparkTestBase {
     assert(df.isEmpty)
   }
 
+  test("a file: URI page directory loads the rows of its bare path; a " +
+      "missing one is still empty; another scheme is refused by name") {
+    import spark.implicits._
+    val want = load(dir).as[String].collect().toSeq
+    assert(want.size == 2)
+    for (uri <- Seq(s"file:$dir", Paths.get(dir).toUri.toString))
+      assert(load(uri).as[String].collect().toSeq == want, uri)
+    assert(load(s"file:$dir/nonexistent").isEmpty)
+    val e = intercept[IllegalArgumentException] {
+      load("hdfs://namenode:8020/pages").collect()
+    }
+    assert(e.getMessage.contains("'hdfs'"), e.getMessage)
+  }
+
   // --- live modes: the pagination loop + chunking THROUGH the DSv2 seam --
 
   test("mode=pages: reader follows nextPageToken across a fake fetcher") {
