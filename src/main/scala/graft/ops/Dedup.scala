@@ -3,8 +3,10 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.LongAccumulator
 
 /** Deduplication operators (builder north star; SURVEY.md §2.12):
   * exact (hash-groupBy), MinHash+LSH (shingle → minhash → band →
@@ -71,11 +73,11 @@ object Dedup {
   /** Signature aggregation over an existing shingle table — lets pipelines
     * that need both shingles and signatures (LSH + Jaccard verify) compute
     * the shingle stage once and reuse it. */
-  def minhashFromShingles(shingles: DataFrame, idCol: String): DataFrame = {
-    val aggs = seeds.zipWithIndex.map { case (k, j) =>
-      min(expr(s"h ^ ${k}L")).as(s"m$j")
-    }
-    shingles.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+  def minhashFromShingles(shingles: DataFrame, idCol: String): DataFrame =
+    shingles.groupBy(col(idCol)).agg(minhashAggs.head, minhashAggs.tail: _*)
+
+  private def minhashAggs: Seq[Column] = seeds.zipWithIndex.map {
+    case (k, j) => min(expr(s"h ^ ${k}L")).as(s"m$j")
   }
 
   /** LSH banding: signature → (band, band_key) rows → self-join on band
@@ -91,6 +93,11 @@ object Dedup {
     * so an incremental run loads this table for the base corpus instead
     * of re-hashing it (see [[deltaNearDups]]). */
   def bandTable(sig: DataFrame, idCol: String,
+      bands: Int = 4, rowsPerBand: Int = 4): DataFrame =
+    bandRows(sig, Seq(col(idCol)), bands, rowsPerBand)
+
+  /** [[bandTable]] keeping the columns `keep` on every band row. */
+  private def bandRows(sig: DataFrame, keep: Seq[Column],
       bands: Int = 4, rowsPerBand: Int = 4): DataFrame = {
     require(bands * rowsPerBand == NumHashes)
     val bandStructs = (0 until bands).map { b =>
@@ -98,8 +105,8 @@ object Dedup {
       s"struct(${b} AS band, md5(concat_ws(',', ${cols.mkString(", ")})) AS bk)"
     }
     sig
-      .select(col(idCol), explode(expr(s"array(${bandStructs.mkString(", ")})")).as("b"))
-      .select(col(idCol), col("b.band").as("band"), col("b.bk").as("bk"))
+      .select(keep :+ explode(expr(s"array(${bandStructs.mkString(", ")})")).as("b"): _*)
+      .select(keep ++ Seq(col("b.band").as("band"), col("b.bk").as("bk")): _*)
   }
 
   /** The LSH candidate join shared by the MinHash (text) and sign-bit
@@ -121,17 +128,27 @@ object Dedup {
   val MaxBucket = 100000L
   def bandJoin(bands: DataFrame, idCol: String, outA: String,
       outB: String, maxBucket: Long = MaxBucket): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bk"))
-    val pruned = bands
-      .withColumn("_n", count(lit(1)).over(w))
-      .filter(col("_n") <= maxBucket)
-      .select(col(idCol), col("band"), col("bk"))
+    val pruned = prunedBuckets(bands.select(col(idCol), col("band"),
+      col("bk")), maxBucket)
     val a = pruned.select(col(idCol).as(outA), col("band"), col("bk"))
     val b = pruned.select(col(idCol).as(outB), col("band"), col("bk"))
     a.join(b, Seq("band", "bk"))
       .filter(col(outA) < col(outB))
       .select(outA, outB).distinct()
+  }
+
+  /** The skew valve of [[bandJoin]] and the near-dup trunk, its one
+    * definition: the `bands` rows whose (band, bk) bucket holds 2 to
+    * `maxBucket` rows. A bucket of one pairs nothing; a bucket past the
+    * cap is dropped (see [[MaxBucket]]). The sizes come from a count
+    * window hash-partitioned on (band, bk), the partitioning the join or
+    * aggregate above needs anyway, so no exchange is added. */
+  private def prunedBuckets(bands: DataFrame, maxBucket: Long): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("band"), col("bk"))
+    bands.withColumn("_n", count(lit(1)).over(w))
+      .where(col("_n").between(2, maxBucket))
+      .drop("_n")
   }
 
   /** Exact n-gram Jaccard for candidate pairs: inverted-index join on the
@@ -152,7 +169,7 @@ object Dedup {
     // jaccardOnCandidates with the harness-clearCache LIFECYCLE
     // (Verify/Bench call clearCache per query). Library callers who
     // need deterministic cleanup should build docShingleSets +
-    // jaccardOnSets and own the cache, as nearDupComponentsOnIndex does.
+    // jaccardOnSets and own the cache.
     jaccardOnCandidates(candidateShingles(shingles, pairs, idCol),
       pairs, idCol)
 
@@ -173,9 +190,15 @@ object Dedup {
     * exchange-free. Arrays are doc-sized (bounded by document length),
     * never corpus-sized. */
   def docShingleSets(sh: DataFrame, idCol: String): DataFrame =
-    sh.groupBy(col(idCol)).agg(
-      sort_array(collect_list(col("h"))).as("_hs"),
-      count(lit(1)).as("n"))
+    sh.groupBy(col(idCol)).agg(setAggs.head, setAggs.tail: _*)
+
+  private def setAggs: Seq[Column] =
+    Seq(sort_array(collect_list(col("h"))).as("_hs"), count(lit(1)).as("n"))
+
+  /** Shingle-set Jaccard from the intersection and the two set sizes —
+    * the formula both Jaccard verifies filter on. */
+  private def jaccardOf(nInter: Column, nA: Column, nB: Column): Column =
+    nInter.cast("double") / (nA + nB - nInter)
 
   /** Jaccard verify over prebuilt per-doc set rows (see
     * [[docShingleSets]]); the caller controls the sets frame's caching
@@ -197,9 +220,7 @@ object Dedup {
       .where(col("n_inter") >= 1)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"),
         col("n_b"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double")
-          / (col("n_a") + col("n_b") - col("n_inter")))
+      .withColumn("jaccard", jaccardOf(col("n_inter"), col("n_a"), col("n_b")))
   }
 
   /** Jaccard verify over a pre-filtered candidate-shingle table (see
@@ -736,38 +757,53 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** Near-dup components from verified pairs — ADAPTIVE on the edge
-    * count (known for free: the edge set is checkpointed either way):
+  /** Connected components of a pair graph, as (node, label) with label =
+    * the component's min id; ids in no pair are absent. `pairs` needs
+    * (doc_a, doc_b) and may repeat a pair (the near-dup trunk emits one
+    * row per shared LSH band); neither path minds.
     *
-    *  - small graphs (≤ `smallGraphMaxEdges` directed edges, i.e. what
-    *    LSH+verify yields on anything but a pathologically duplicated
-    *    corpus — verified near-dup pairs are sparse by construction): an
-    *    exact single-pass union-find on ONE executor partition. One
-    *    narrow job, no iteration, no per-round checkpoint/count jobs.
-    *  - large graphs: min-label propagation WITH POINTER JUMPING
-    *    (label ← label(label) each round, the Shiloach–Vishkin
-    *    shortcut) run TO THE FIXPOINT — the loop stops when a round
-    *    lowers zero labels, so every node ends with the true component
-    *    minimum no matter how long the duplicate chain is (a fixed
-    *    round count would split a chain longer than its iteration
-    *    budget into multiple "keepers" and silently under-remove).
-    *    Rounds needed = O(log diameter), NOT diameter — a 100-link dup
-    *    chain converges in ~7 rounds, not 100; `maxIters` is only a
-    *    runaway guard. Rounds-to-fixpoint is exported via the session
-    *    conf `spark.graft.dedup.lastComponentsRounds` (read by
-    *    [[graft.tools.ComponentsProbe]]).
+    * The path is decided inside the union-find task. The pairs reach ONE
+    * task through a one-partition exchange (`repartition(1)`, so the
+    * stage that produces them keeps its parallelism). The task unions
+    * the pairs as they stream in; once its map holds more nodes than the
+    * cap it stops reading, raises an overflow flag (a task-side
+    * accumulator) and emits no rows. The task's output is
+    * `localCheckpoint`ed once — that action also runs the stages of a
+    * lazy `pairs`, one job per shuffle stage — and the flag is read on
+    * the driver, which costs no job. Only on overflow does propagation
+    * run, and it recomputes `pairs`. The union-find path runs no
+    * count(), caches nothing and writes no conf key.
     *
-    * Both paths return (node, label), label = min doc id in the
-    * component, and are asserted identical in DedupSpec.
+    *  - union-find: union-by-min (the larger root goes under the smaller,
+    *    so every root IS the component minimum) with path compression,
+    *    executor-side, not a driver collect. Task memory follows the
+    *    distinct node count, which the cap bounds: at the default the
+    *    boxed map holds at most ~1M entries (~100–200 MB with md5-string
+    *    keys). Ids may be of any Comparable runtime type (long ids, md5
+    *    strings).
+    *  - propagation: min-label propagation WITH POINTER JUMPING (label ←
+    *    label(label) each round, the Shiloach–Vishkin shortcut) run TO
+    *    THE FIXPOINT — the loop stops when a round lowers zero labels,
+    *    so every node ends with the true component minimum however long
+    *    the duplicate chain (a fixed round count would split a long
+    *    chain into several "keepers" and silently under-remove). Rounds
+    *    = O(log diameter): a 100-link chain converges in ~7 rounds;
+    *    `maxIters` is only a runaway guard. Rounds-to-fixpoint is
+    *    exported via the session conf
+    *    `spark.graft.dedup.lastComponentsRounds`.
     *
-    * The gate is tunable WITHOUT a code change via the session config
-    * `spark.graft.dedup.unionFindMaxEdges` (directed-edge count,
-    * default 2^20): a deployment whose executors have more/less task
-    * memory than the default assumes can move the single-task
-    * union-find boundary per job. An explicit `smallGraphMaxEdges ≥ 0`
-    * argument wins over the config (the sentinel −1 means "read the
-    * config").
-    * Returns (node, label) where label = min doc id in the component. */
+    * The cap is the session config `spark.graft.dedup.unionFindMaxEdges`
+    * (default 2^20), so a deployment can move it per job without a code
+    * change; an explicit `smallGraphMaxEdges ≥ 0` wins (the sentinel −1
+    * reads the config). The task compares it with the distinct nodes it
+    * has seen, never more than the distinct directed edges, so a graph
+    * within the cap in directed edges always stays on union-find, and
+    * repeated pairs (the near-dup trunk emits one per shared LSH band)
+    * do not move the switch. A `knownPairCount` (the caller counted
+    * `pairs` already) whose 2× passes the cap goes straight to
+    * propagation.
+    *
+    * Both paths return the same (node, label) set (DedupSpec). */
   def nearDupComponents(pairs: DataFrame, maxIters: Int = 50,
       smallGraphMaxEdges: Long = -1L,
       knownPairCount: Option[Long] = None): DataFrame = {
@@ -776,32 +812,68 @@ object Dedup {
       else pairs.sparkSession.conf
         .get("spark.graft.dedup.unionFindMaxEdges", (1L << 20).toString)
         .toLong
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // Path choice needs the edge count. When the caller already counted
-    // the pair set (nearDupRemovals counts its checkpointed pairs anyway
-    // for the emptiness gate), reuse it — directed edges = 2 × pairs —
-    // instead of running a checkpoint + count job pair just to decide.
-    // With a known-small count, union-find reads the edges exactly once
-    // off the caller's (checkpointed) pairs, so no extra checkpoint.
-    val nEdges = knownPairCount.map(_ * 2).getOrElse(-1L)
-    if (nEdges >= 0 && nEdges <= maxEdges)
-      return smallGraphComponents(edges)
+    if (knownPairCount.exists(_ * 2 > maxEdges))
+      labelPropagation(pairs, maxIters)
+    else {
+      val overflow = pairs.sparkSession.sparkContext.longAccumulator
+      val labels = unionFind(pairs, maxEdges, overflow).localCheckpoint()
+      if (overflow.isZero) labels else labelPropagation(pairs, maxIters)
+    }
+  }
+
+  /** The single union-find task of [[nearDupComponents]]: (node, label)
+    * for every id in `pairs`, or no rows and `overflow` raised once more
+    * than `maxEdges` distinct ids have arrived. */
+  private def unionFind(pairs: DataFrame, maxEdges: Long,
+      overflow: LongAccumulator): DataFrame = {
+    val idType = pairs.schema("doc_a").dataType
+    val schema = StructType(Seq(
+      StructField("node", idType), StructField("label", idType)))
+    pairs.select("doc_a", "doc_b").repartition(1).mapPartitions {
+      (it: Iterator[Row]) =>
+        val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+        def cmp(a: Any, b: Any): Int =
+          a.asInstanceOf[Comparable[Any]].compareTo(b)
+        def find(x: Any): Any = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        while (parent.size <= maxEdges && it.hasNext) {
+          val row = it.next()
+          val s = row.get(0); val d = row.get(1)
+          parent.getOrElseUpdate(s, s); parent.getOrElseUpdate(d, d)
+          val rs = find(s); val rd = find(d)
+          if (rs != rd) {
+            if (cmp(rs, rd) <= 0) parent(rd) = rs else parent(rs) = rd
+          }
+        }
+        if (parent.size > maxEdges) {
+          overflow.add(1L)
+          Iterator.empty[Row]
+        } else parent.keysIterator.map(n => Row(n, find(n)))
+    }(Encoders.row(schema))
+  }
+
+  /** The propagation path of [[nearDupComponents]]. */
+  private def labelPropagation(pairs: DataFrame, maxIters: Int): DataFrame = {
     // Iterative algorithms MUST truncate lineage each round: every
     // generation references the previous one twice, so the LOGICAL plan
     // (not just the computation) doubles per iteration — 2^iters copies
     // of the whole upstream pipeline sent through the analyzer. cache()
     // does not cut lineage; localCheckpoint() does (eager, plan replaced
     // by the materialized blocks).
-    val edgesCk = edges.localCheckpoint()
-    if (nEdges < 0 && edgesCk.count() <= maxEdges)
-      return smallGraphComponents(edgesCk)
-    var labels = edgesCk.select(col("src").as("node")).distinct()
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .localCheckpoint()
+    var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIters) {
-      val neighborMin = edgesCk
+      val neighborMin = edges
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src").as("node"))
         .agg(min(col("label")).as("nlabel"))
@@ -837,107 +909,112 @@ object Dedup {
     }
     require(changed == 0,
       s"nearDupComponents did not converge within $maxIters rounds")
-    // observable convergence: rounds-to-fixpoint = graph diameter; the
-    // scale probes read this back (SCALE.md fallback table) and a
+    // observable convergence: rounds-to-fixpoint = graph diameter; a
     // deployment can alert on it without log scraping
     pairs.sparkSession.conf
       .set("spark.graft.dedup.lastComponentsRounds", round.toString)
     labels
   }
 
-  /** Exact connected components via union-find over an edge set small
-    * enough for one partition. Task memory is driven by the DISTINCT
-    * NODE count (the parent map), not the edge count — edges stream
-    * through the iterator once. Worst case (a perfect matching) is one
-    * node per directed edge, so the ≤ 2^20 default bounds the boxed map
-    * at ~1M entries (~100-200 MB even with md5-string keys); real dup
-    * graphs have far fewer nodes than edges, which is what makes them
-    * dup graphs. The edges are read exactly once, so the caller may pass
-    * either a checkpointed frame or a short-lineage derivation.
-    * Runs executor-side as a single narrow task — NOT a driver collect —
-    * with union-by-min (attach the larger root under the smaller), so
-    * each root IS the component minimum, plus path compression. Key type
-    * stays generic: anything with a Comparable runtime value (long ids,
-    * md5 strings) works, matching the propagation path's `min`
-    * semantics. */
-  private def smallGraphComponents(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val idType = edges.schema("src").dataType
-    val schema = StructType(Seq(
-      StructField("node", idType), StructField("label", idType)))
-    val rows = edges.rdd.coalesce(1).mapPartitions { it =>
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def cmp(a: Any, b: Any): Int =
-        a.asInstanceOf[Comparable[Any]].compareTo(b)
-      def find(x: Any): Any = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      it.foreach { row =>
-        val s = row.get(0); val d = row.get(1)
-        parent.getOrElseUpdate(s, s); parent.getOrElseUpdate(d, d)
-        val rs = find(s); val rd = find(d)
-        if (rs != rd) {
-          if (cmp(rs, rd) <= 0) parent(rd) = rs else parent(rs) = rd
-        }
-      }
-      parent.keysIterator.map(n => Row(n, find(n)))
-    }
-    edges.sparkSession.createDataFrame(rows, schema)
-  }
-
-  /** The shared LSH-dedup trunk: candidates → Jaccard verify at
-    * `threshold` → connected components of the verified-pair graph,
-    * returned as (node, label). Docs in no verified pair are absent
-    * (singletons are not graph nodes). The verified edge set is
-    * materialized once (localCheckpoint) and counted ONCE off the
-    * materialized blocks — that single count serves both the emptiness
-    * short-circuit and nearDupComponents' small-vs-large path choice, so
-    * no separate isEmpty job or second checkpoint/count pair runs. All
-    * three pipeline caches are unpersisted deterministically before
-    * returning. [[nearDupRemovals]] and [[nearDupClusterHistogram]] are
-    * thin rollups over this. */
+  /** The MinHash near-dup trunk: LSH band collisions → shingle-set
+    * Jaccard ≥ `threshold` → connected components, as (node, label) with
+    * label = the component's min id; docs in no verified pair are
+    * absent. [[nearDupRemovals]] and [[nearDupClusterHistogram]] are thin
+    * rollups over it. Three layers, with no cache and no count():
+    *
+    *  1. ONE `groupBy(id)` over the shingle table yields each doc's 16
+    *     MinHash minima, its sorted shingle-hash array `_hs` and its size
+    *     `n` together ([[minhashFromShingles]] + [[docShingleSets]]).
+    *  2. Band rows carry `_hs`/`n`, and candidates are verified where
+    *     they meet: the [[bandJoin]] valve first drops the (band, bk)
+    *     buckets outside 2 to [[MaxBucket]] members; each remaining
+    *     bucket pairs its members and keeps the pairs whose row-local
+    *     sorted-merge Jaccard reaches `threshold`. There is no
+    *     cross-band distinct: a pair colliding in k bands leaves as k
+    *     equal edges, which the components step does not mind.
+    *  3. [[nearDupComponents]] picks union-find or propagation inside
+    *     its single task.
+    *
+    * So one call launches four jobs on the union-find path: the
+    * shingle-aggregate shuffle, the bucket shuffle, the one-partition
+    * exchange and the union-find task's checkpoint. Its consumer then
+    * reads the checkpointed labels: `nearDupRemovals(…).collect()` on
+    * DedupSpec's parity corpus runs 5 jobs, and the corpus_curation
+    * near-dup op 11.
+    *
+    * The price is shuffle bytes, because band rows carry the arrays: the
+    * corpus_curation near-dup op writes 5.6 MB instead of 3.1 MB at
+    * 3 000 docs, and 55.8 MB instead of 32.6 MB at 30 000 docs. Its
+    * time still falls at both sizes (3.7 → 1.3 s and 8.0 → 3.4 s on a
+    * shared 4-core box, `local[4]`), because the cost per call was jobs,
+    * not bytes. */
   def nearDupComponentsOf(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double): DataFrame = {
-    val shingles = shingleTable(docs, idCol, textCol).cache()
-    val comps = nearDupComponentsOnIndex(shingles,
-      bandTable(minhashFromShingles(shingles, idCol), idCol),
-      idCol, threshold)
-    shingles.unpersist()
-    comps
+      threshold: Double): DataFrame =
+    nearDupComponents(verifiedPairsOf(docs, idCol, textCol, threshold))
+
+  /** Layers 1 and 2 of [[nearDupComponentsOf]]: its verified (doc_a,
+    * doc_b) pairs, doc_a < doc_b, one row per shared band. */
+  private[ops] def verifiedPairsOf(docs: DataFrame, idCol: String,
+      textCol: String, threshold: Double,
+      maxBucket: Long = MaxBucket): DataFrame = {
+    val perDoc = shingleTable(docs, idCol, textCol).groupBy(col(idCol))
+      .agg(setAggs.head, setAggs.tail ++ minhashAggs: _*)
+    verifiedPairs(bandRows(perDoc, Seq(col(idCol), col("_hs"), col("n"))),
+      idCol, threshold, maxBucket)
   }
 
-  /** The components trunk over PREBUILT shingle + band tables — the
-    * persisted-layout seam ([[nearDupComponentsOf]] builds both inline;
-    * a production corpus persists them once — shingles bucketed by doc
-    * id, bands by band key — and every dedup/audit run reads the
-    * parquet). Caller owns the input frames' lifecycles. */
+  /** [[nearDupComponentsOf]] over PREBUILT shingle + band tables — the
+    * persisted-layout seam (a production corpus persists them once:
+    * shingles bucketed by doc id, bands by band key). It joins
+    * [[docShingleSets]] onto the band rows by id and runs the same
+    * layers 2 and 3, so the jobs and the path choice are the ones
+    * [[nearDupComponentsOf]] describes. The caller owns the input
+    * frames' lifecycles. */
   def nearDupComponentsOnIndex(shingles: DataFrame, bands: DataFrame,
-      idCol: String, threshold: Double): DataFrame = {
-    val cand = bandJoin(bands, idCol, "doc_a", "doc_b").cache()
-    // own the candidate SET-row cache (vs jaccardOnCandidates' internal
-    // one, which only a harness clearCache reclaims): the per-doc set
-    // rows feed both probe sides of the verify; the verified pairs are
-    // localCheckpoint-materialized by count() below, after which the
-    // caches are dead weight and unpersisted deterministically.
-    val candSets = docShingleSets(
-      candidateShingles(shingles, cand, idCol), idCol).cache()
-    val verified = jaccardOnSets(candSets, cand, idCol)
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b").localCheckpoint()
-    val nPairs = verified.count()
-    val comps =
-      if (nPairs == 0L)
-        verified.select(col("doc_a").as("node"), col("doc_a").as("label"))
-          .limit(0)
-      else nearDupComponents(verified, knownPairCount = Some(nPairs))
-    cand.unpersist()
-    candSets.unpersist()
-    comps
+      idCol: String, threshold: Double): DataFrame =
+    nearDupComponents(verifiedPairs(
+      bands.join(docShingleSets(shingles, idCol), idCol), idCol, threshold,
+      MaxBucket))
+
+  /** Layer 2 of the near-dup trunk over (id, band, bk, _hs, n) band rows.
+    * The skew valve ([[prunedBuckets]], shared with [[bandJoin]]) drops
+    * the buckets outside 2..`maxBucket` members first, on small spillable
+    * rows that the window sorts. Each surviving bucket's members are then
+    * gathered into one row, and each member pairs with the members before
+    * it, so the band rows pass through ONE exchange. A self-join (what
+    * [[bandJoin]] runs) yields the same (pair, bucket) rows, but its two
+    * sides share no exchange when the input derives from a cached frame,
+    * and Spark's adaptive planner then runs the whole per-doc pipeline
+    * twice (measured: 1.0 vs 0.6 s for the verified pairs of 3 000
+    * corpus_curation docs).
+    *
+    * The pairing is m(m−1)/2 rows per bucket of m members, the same rows
+    * the self-join emits, and they stream: a member's row carries one
+    * index array of fewer than m ints, and the other member is read in
+    * place from the bucket row (`element_at`), never copied into a pair
+    * array (the generator OPTIMIZATION_r14.md rejected built one array
+    * of all the bucket's pairs). What the gather does cost: a bucket row
+    * is one aggregation buffer that cannot spill, of at most `maxBucket`
+    * doc-sized arrays (about 400 MB for 100 000 members of 500 shingles
+    * each), where the self-join's per-key buffer could spill. */
+  private def verifiedPairs(bands: DataFrame, idCol: String,
+      threshold: Double, maxBucket: Long): DataFrame = {
+    import graft.expr.VectorKernels.sorted_intersect_count
+    val b = element_at(col("_m"), col("_j"))
+    val nInter = sorted_intersect_count(col("a._hs"), b("_hs"))
+    prunedBuckets(bands, maxBucket).groupBy(col("band"), col("bk"))
+      .agg(collect_list(struct(col(idCol).as("id"), col("_hs"), col("n")))
+        .as("_m"))
+      .select(col("_m"), posexplode(col("_m")).as(Seq("_i", "a")))
+      .where(col("_i") > 0)
+      .select(col("_m"), col("a"),
+        explode(sequence(lit(1), col("_i"))).as("_j"))
+      .where(col("a.id") =!= b("id"))
+      .withColumn("n_inter", nInter)
+      .where(col("n_inter") >= 1 &&
+        jaccardOf(col("n_inter"), col("a.n"), b("n")) >= threshold)
+      .select(least(col("a.id"), b("id")).as("doc_a"),
+        greatest(col("a.id"), b("id")).as("doc_b"))
   }
 
   /** [[nearDupRemovals]] over the persisted index tables. */
@@ -983,21 +1060,14 @@ object Dedup {
     * MinHash path of [[nearDupRemovals]] (one wide aggregate per doc, no
     * shingle explosion): simhash → pigeonhole band join → exact hamming
     * verify ≤ `maxDist` → connected components → drop every non-keeper
-    * member. Returns the ids of REMOVED docs.
-    *
-    * Same lifecycle discipline as [[nearDupRemovals]]: the simhash table
-    * is cached HERE (it feeds banding + both verify probes) and
-    * unpersisted deterministically; the verified edge set is
-    * localCheckpoint-materialized and counted ONCE, the count serving
-    * both the emptiness short-circuit and nearDupComponents'
-    * union-find-vs-propagation choice. The components machinery is
-    * family-agnostic — this path reuses [[nearDupComponents]] unchanged. */
+    * member. Returns the ids of REMOVED docs. The simhash table is
+    * cached HERE (it feeds banding + both verify probes) and unpersisted
+    * before returning. */
   def simhashRemovals(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame = {
     val sh = simhash(docs, idCol, textCol).cache()
-    // the verified edge set is checkpoint-materialized inside
-    // simhashRemovalsOnTable before this returns, so the unpersist
-    // cannot re-trigger the signature pipeline
+    // nearDupComponents checkpoints its labels before this returns, so
+    // the unpersist cannot re-trigger the signature pipeline
     val removed = simhashRemovalsOnTable(sh, idCol, maxDist)
     sh.unpersist()
     removed
@@ -1005,20 +1075,14 @@ object Dedup {
 
   /** [[simhashRemovals]] over an EXISTING (id, simhash) table — the
     * persisted-layout seam (q81 reads `Tables.docSimhashTable`; caller
-    * owns the frame's lifecycle). The verified edge set is
-    * localCheckpoint-materialized and counted ONCE, the count serving
-    * both the emptiness short-circuit and nearDupComponents'
-    * union-find-vs-propagation choice. */
+    * owns the frame's lifecycle). The verified pairs stream straight
+    * into [[nearDupComponents]], which picks its path inside the
+    * union-find task. */
   def simhashRemovalsOnTable(sh: DataFrame, idCol: String,
-      maxDist: Int = 3): DataFrame = {
-    val pairs = simhashNearDupsOnTable(sh, idCol, maxDist)
-      .select("doc_a", "doc_b").localCheckpoint()
-    val nPairs = pairs.count()
-    if (nPairs == 0L) pairs.select(col("doc_a").as(idCol)).limit(0)
-    else nearDupComponents(pairs, knownPairCount = Some(nPairs))
+      maxDist: Int = 3): DataFrame =
+    nearDupComponents(simhashNearDupsOnTable(sh, idCol, maxDist))
       .filter(col("label") < col("node"))
       .select(col("node").as(idCol))
-  }
 
   /** Cross-document duplicated word-k-grams — the exact SUBSTRING-level
     * duplication signal (document-level dedup misses boilerplate repeated

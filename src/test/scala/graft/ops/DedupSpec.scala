@@ -628,4 +628,121 @@ class DedupSpec extends SparkTestBase {
     assert(g.getAs[Double]("m_r") == 1.0)
     assert(g.isNullAt(g.fieldIndex("w_disagree_r")))
   }
+
+  /** The near-dup trunk's parity corpus (fixed seed, ~200 docs): 120
+    * unique docs, 20 planted near-dup families of 2–4 members (1–3 word
+    * edits on 40 words), a 15-doc boilerplate family sharing a 24-word
+    * template (pairwise Jaccard ≈ 0.4, under the 0.5 threshold, so any
+    * band collision among them must be rejected), an exact pair that
+    * collides in all 4 bands, and three docs under 3 tokens. */
+  private lazy val parityDocs = {
+    val rnd = new scala.util.Random(606L)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(5000)}")
+    val unique = Seq.fill(120)(words(40))
+    val families = Seq.fill(20) {
+      val base = words(40)
+      base +: Seq.fill(1 + rnd.nextInt(3)) {
+        (1 to 1 + rnd.nextInt(3)).foldLeft(base) { (d, _) =>
+          d.updated(rnd.nextInt(d.size), s"e${rnd.nextInt(5000)}")
+        }
+      }
+    }.flatten
+    val template = words(24)
+    val boiler = Seq.fill(15)(template ++ words(16))
+    val exact = words(40)
+    val texts = (unique ++ families ++ boiler ++ Seq(exact, exact))
+      .map(_.mkString(" ")) ++ Seq("ab", "x y", "")
+    // shuffled ids, so no family sits on consecutive ids
+    rnd.shuffle(texts.indices.toList).zip(texts)
+      .map { case (i, t) => (i.toLong + 1, t) }.toDF("doc_id", "text")
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+
+  private def idSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.getLong(0)).toSet
+
+  test("near-dup trunk parity: verify-in-bucket ≡ the composed " +
+      "helpers (bandJoin → candidate sets → jaccardOnSets → components)") {
+    val sh = Dedup.shingleTable(parityDocs, "doc_id", "text")
+    val cand = Dedup.bandJoin(Dedup.bandTable(
+      Dedup.minhashFromShingles(sh, "doc_id"), "doc_id"),
+      "doc_id", "doc_a", "doc_b")
+    val verified = Dedup.jaccardOnSets(Dedup.docShingleSets(
+        Dedup.candidateShingles(sh, cand, "doc_id"), "doc_id"), cand, "doc_id")
+      .filter(col("jaccard") >= 0.5).select("doc_a", "doc_b")
+    val (nCand, nVer) = (cand.count(), verified.count())
+    assert(nVer >= 20 && nCand > nVer,
+      s"fixture must verify pairs AND reject candidates ($nCand → $nVer)")
+    val want = pairSet(Dedup.nearDupComponents(verified))
+    val got = pairSet(Dedup.nearDupComponentsOf(parityDocs, "doc_id",
+      "text", 0.5))
+    assert(got == want, s"missing=${want -- got} extra=${got -- want}")
+    val removed = idSet(Dedup.nearDupRemovals(parityDocs, "doc_id",
+      "text", 0.5))
+    val viaIndex = idSet(Dedup.nearDupRemovalsOnIndex(sh,
+      Dedup.bandTable(Dedup.minhashFromShingles(sh, "doc_id"), "doc_id"),
+      "doc_id", 0.5))
+    assert(viaIndex == removed)
+    assert(removed == want.collect { case (n, l) if l < n => n })
+  }
+
+  test("components overflow: a union-find cap of 0 or 1 edge falls back " +
+      "to propagation with the same near-dup and simhash removals") {
+    val key = "spark.graft.dedup.unionFindMaxEdges"
+    def run() = (
+      idSet(Dedup.nearDupRemovals(parityDocs, "doc_id", "text", 0.5)),
+      idSet(Dedup.simhashRemovals(parityDocs, "doc_id", "text", 3)))
+    val atDefault = run()
+    assert(atDefault._1.nonEmpty && atDefault._2.nonEmpty)
+    for (cap <- Seq("1", "0")) {
+      try {
+        spark.conf.set(key, cap)
+        assert(run() == atDefault, s"cap $cap")
+      } finally spark.conf.unset(key)
+    }
+    val pairs = Dedup.simhashNearDups(parityDocs, "doc_id", "text", 3)
+    assert(pairSet(Dedup.nearDupComponents(pairs, smallGraphMaxEdges = 0)) ==
+      pairSet(Dedup.nearDupComponents(pairs)))
+  }
+
+  test("near-dup removal runs a fixed handful of Spark jobs") {
+    val sc = spark.sparkContext
+    val group = "neardup-job-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "near-dup job pin")
+      try Dedup.nearDupRemovals(parityDocs, "doc_id", "text", 0.5).collect()
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    info(s"jobs: ${jobs.get}")
+    assert(jobs.get > 0 && jobs.get <= 7, s"${jobs.get} jobs (5 measured)")
+  }
+
+  test("near-dup trunk leaves no cache entry and writes no spark.graft conf") {
+    def graftConf = spark.conf.getAll.filter(_._1.startsWith("spark.graft."))
+    spark.catalog.clearCache()
+    val confBefore = graftConf
+    val sh = Dedup.shingleTable(parityDocs, "doc_id", "text")
+    val bands = Dedup.bandTable(Dedup.minhashFromShingles(sh, "doc_id"),
+      "doc_id")
+    Dedup.nearDupRemovals(parityDocs, "doc_id", "text", 0.5).collect()
+    Dedup.nearDupClusterHistogram(parityDocs, "doc_id", "text", 0.5)
+      .collect()
+    Dedup.nearDupRemovalsOnIndex(sh, bands, "doc_id", 0.5).collect()
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "the trunk must not leave a cached frame")
+    assert(graftConf == confBefore)
+  }
 }

@@ -22,6 +22,21 @@ class EdgeCasesSpec extends SparkTestBase {
     assert(removed.columns.toSeq == Seq("doc_id"))
   }
 
+  test("near-dup and simhash removal on an empty and an all-short corpus") {
+    val short = Seq((1L, "ab"), (2L, "ab"), (3L, "x y"), (4L, ""))
+      .toDF("doc_id", "text")
+    for (d <- Seq(noDocs, short)) {
+      assert(Dedup.nearDupComponentsOf(d, "doc_id", "text", 0.5).isEmpty)
+      assert(Dedup.nearDupRemovals(d, "doc_id", "text", 0.5).isEmpty)
+      assert(Dedup.nearDupClusterHistogram(d, "doc_id", "text", 0.5).isEmpty)
+      val sh = Dedup.shingleTable(d, "doc_id", "text")
+      assert(Dedup.nearDupRemovalsOnIndex(sh, Dedup.bandTable(
+        Dedup.minhashFromShingles(sh, "doc_id"), "doc_id"),
+        "doc_id", 0.5).isEmpty)
+    }
+    assert(Dedup.simhashRemovals(noDocs, "doc_id", "text").isEmpty)
+  }
+
   test("simhash / fingerprints / text scoring on empty input") {
     assert(Dedup.simhash(noDocs, "doc_id", "text").isEmpty)
     assert(TextOps.fingerprints(noDocs, "doc_id", "text").isEmpty)

@@ -63,4 +63,56 @@ class SkewValveSpec extends SparkTestBase {
     assert(n == 80L * 79 / 2 + 2 * 45,
       s"uncapped pair count should include the hot bucket, got $n")
   }
+
+  // the near-dup trunk applies the same valve: 6 verbatim copies of one
+  // doc collide in all 4 bands (buckets of 6), beside a 3-member
+  // near-dup family and unique docs
+  private def hotDocs() = {
+    val rnd = new scala.util.Random(134L)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(5000)}")
+    val hot = words(40)
+    val fam = words(40)
+    val texts = Seq.fill(6)(hot) ++
+      Seq(fam, fam.updated(3, "e1"), fam.updated(7, "e2")) ++
+      Seq.fill(20)(words(40))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t.mkString(" ")) }
+      .toDF("doc_id", "text")
+  }
+
+  test("near-dup trunk drops a hot bucket before gathering its members, " +
+      "exactly as bandJoin's valve does") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val docs = hotDocs()
+    val got = pairs(Dedup.verifiedPairsOf(docs, "doc_id", "text", 0.5,
+      maxBucket = 5L))
+    val sh = Dedup.shingleTable(docs, "doc_id", "text")
+    val cand = Dedup.bandJoin(Dedup.bandTable(
+      Dedup.minhashFromShingles(sh, "doc_id"), "doc_id"),
+      "doc_id", "doc_a", "doc_b", maxBucket = 5L)
+    val want = pairs(Dedup.jaccardOnSets(Dedup.docShingleSets(sh, "doc_id"),
+        cand, "doc_id")
+      .filter(col("jaccard") >= 0.5).select("doc_a", "doc_b"))
+    assert(got == want)
+    // only family pairs survive (which of them collide is LSH's draw)
+    assert(got.nonEmpty && got.forall { case (a, b) => a >= 7 && b <= 9 },
+      got.toString)
+    val uncapped = pairs(Dedup.verifiedPairsOf(docs, "doc_id", "text", 0.5))
+    assert(uncapped -- got == (for (a <- 1L to 6L; b <- a + 1 to 6L)
+      yield (a, b)).toSet)
+  }
+
+  test("near-dup trunk plan: the count window + filter sit below the " +
+      "per-bucket aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
+      Window}
+    val plan = Dedup.verifiedPairsOf(hotDocs(), "doc_id", "text", 0.5)
+      .queryExecution.optimizedPlan
+    val guarded = plan.collect { case a: Aggregate => a }.exists(_.exists {
+      case f: Filter => f.condition.toString.contains("_n") &&
+        f.exists(_.isInstanceOf[Window])
+      case _ => false
+    })
+    assert(guarded, s"the valve must feed the bucket aggregate:\n$plan")
+  }
 }
