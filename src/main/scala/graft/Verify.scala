@@ -22,9 +22,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional runtime-conf overrides (e.g. SPARK_GRAFT_SPARK_CONF=
-    // "spark.graft.dedup.unionFindMaxEdges=0") — lets the scale probes
-    // force alternate physical paths (the distributed components
-    // fallback) through the SAME correctness gate, no code edits
+    // "spark.graft.dedup.unionFindMaxEdges=0") — forces the fallback
+    // paths behind the driver-local valves (here the distributed
+    // components path) through the SAME oracle gate, no code edits
     sys.env.get("SPARK_GRAFT_SPARK_CONF").foreach(_.split(',')
       .map(_.trim).filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

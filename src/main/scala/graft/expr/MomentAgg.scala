@@ -102,18 +102,6 @@ case class MomentMatrix(child: Expression,
 
   override def createAggregationBuffer(): MomentBuf = new MomentBuf
 
-  /** t12 of a product, as a scale-12 unscaled value. The two-step
-    * BigDecimal walk is Spark's own Round(p, 12) (valueOf → setScale
-    * HALF_UP → double) followed by Cast(double → decimal(28,12))
-    * (valueOf of the ROUNDED double → setScale) — see
-    * Similarity.t12Local, which pins the same trajectory. */
-  @inline private def termUnscaled(p: Double): java.math.BigDecimal = {
-    val r = java.math.BigDecimal.valueOf(p)
-      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    java.math.BigDecimal.valueOf(r)
-      .setScale(12, java.math.RoundingMode.HALF_UP)
-  }
-
   override def update(b: MomentBuf, input: InternalRow): MomentBuf = {
     val e = child.eval(input)
     if (e == null) return b
@@ -136,7 +124,7 @@ case class MomentMatrix(child: Expression,
         var j = 0
         while (j <= k) {
           if (!nulls(j)) {
-            val bd = termUnscaled(vals(j) * y)
+            val bd = graft.util.DriverLocal.t12(vals(j) * y)
             val bits = bd.unscaledValue().bitLength()
             if (bits < 63) b.addUnscaled(base + j, bd.unscaledValue().longValue())
             else b.addBig(base + j, bd.unscaledValue())

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+
 /** Pairwise-preference models: turn observed head-to-head outcomes into
   * per-item strengths (builder extension; the reference's per-entity
   * aggregations rank items by raw totals — fetch_youtube_data.py:149-198
@@ -10,12 +12,6 @@ import org.apache.spark.sql.functions._
   * an item was compared against).
   */
 object Choice {
-  /** Default cap on collected items for the driver-local MM recursion:
-    * the duel matrix is items² by contract (a catalog universe, never
-    * rows); an unbounded caller fails loudly instead of OOMing the
-    * driver. Conf-gated via `spark.graft.driverLocal.itemCap`. */
-  val ItemCap: Int = 1 << 20
-
   /** Bradley–Terry strengths by minorization–maximization (Hunter 2004):
     * given duel outcomes (winner, loser) rows, iterate
     *   p_i ← W_i / Σ_{j≠i} n_ij / (p_i + p_j),
@@ -37,6 +33,7 @@ object Choice {
     * Items that never win converge to p = 0 (their W_i = 0); an item
     * with no losses at all drives its p toward 1 — both are the true
     * (boundary) MLE direction and stay finite under the rescale.
+    * Over `spark.graft.driverLocal.itemCap` items it fails loudly.
     * Returns one row per item: item, w (total wins), p_r (6 dp),
     * rnk (by p desc, item asc). */
   def bradleyTerry(duels: DataFrame, winnerCol: String, loserCol: String,
@@ -59,20 +56,11 @@ object Choice {
         (col("_wij") + col("_wji")).as("_n"))
     val wi = n.groupBy(col("_i")).agg(sum(col("_wij")).as("_wi"))
     // collect the bounded matrix and run the MM recursion locally,
-    // replaying Spark's round→cast decimal grid call for call
-    def t12l(x: Double): java.math.BigDecimal = {
-      val r = java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-      java.math.BigDecimal.valueOf(r)
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-    }
-    val wiRows = wi.collect().map(r => r.get(0) -> r.getLong(1))
-    val cap = duels.sparkSession.conf.get(
-      "spark.graft.driverLocal.itemCap", ItemCap.toString).toInt
-    require(wiRows.length <= cap, s"bradleyTerry has ${wiRows.length}" +
-      s" items > cap $cap — the MM recursion is driver-local on the" +
-      " items² duel matrix, which must stay catalog-bounded (not" +
-      " data-sized)")
+    // replaying Spark's round→cast decimal grid call for call; the
+    // items² matrix is a catalog universe, never rows
+    val wiRows = DriverLocal.collectOrFail(wi, "driverLocal.itemCap",
+      1 << 20, "bradleyTerry's item universe")
+      .map(r => r.get(0) -> r.getLong(1))
     val gRows = games.collect()
       .map(r => (r.get(0), r.get(1), r.getLong(2)))
     val byI = gRows.groupBy(_._1)
@@ -81,22 +69,20 @@ object Choice {
       val praw = wiRows.map { case (i, w0) =>
         var den = java.math.BigDecimal.ZERO
         byI.getOrElse(i, Array.empty).foreach { case (_, j, nij) =>
-          den = den.add(t12l(nij.toDouble / (p(i) + p(j))))
+          den = den.add(DriverLocal.t12(nij.toDouble / (p(i) + p(j))))
         }
         val d = den.doubleValue
         i -> (if (d == 0.0) 0.0 else w0.toDouble / d)
       }
       var s = java.math.BigDecimal.ZERO
-      praw.foreach { case (_, x) => s = s.add(t12l(x)) }
+      praw.foreach { case (_, x) => s = s.add(DriverLocal.t12(x)) }
       val sD = s.doubleValue
       p = praw.map { case (i, x) => i -> x / sD }.toMap
     }
     val sp = duels.sparkSession
     val itemType = duels.schema(winnerCol).dataType
     val out = wiRows.map { case (i, w0) =>
-      org.apache.spark.sql.Row(i, w0,
-        java.math.BigDecimal.valueOf(p(i))
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+      org.apache.spark.sql.Row(i, w0, DriverLocal.r6(p(i)))
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("item", itemType),

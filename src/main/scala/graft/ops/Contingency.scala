@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+
 /** Contingency-grid association: the χ²-family effect sizes, per-cell
   * diagnostics, ordinal concordance, and iterative proportional
   * fitting — the grid-level completions of the categorical toolkit
@@ -22,13 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Contingency {
   private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
-
-  /** Default cap on collected grid cells for the driver-local IPF
-    * recursion: the grid is |X|·|Y| by contract (category universes,
-    * never rows); a caller with an unbounded key space fails loudly
-    * here instead of OOMing the driver. Conf-gated via
-    * `spark.graft.driverLocal.gridCap`. */
-  val GridCap: Int = 1 << 20
 
   /** The zero-filled |X|·|Y| grid with marginals: (x, y, _o observed,
     * _nx, _ny, _n, _r, _c) — the shared trunk of every op here. */
@@ -179,17 +174,12 @@ object Contingency {
     * 12-dp decimal folds and every scale factor is the one
     * fixed-association double expression (target/margin), so the
     * unrolled oracle CTE chain walks the identical trajectory. Zero
-    * cells stay zero (the IPF invariant). Returns the grid: x, y,
-    * n_xy, fitted_r (6 dp), ordered by (x, y) upstream. */
+    * cells stay zero (the IPF invariant). Over
+    * `spark.graft.driverLocal.gridCap` cells it fails loudly. Returns
+    * the grid: x, y, n_xy, fitted_r (6 dp), ordered by (x, y) upstream. */
   def ipfRaking(df: DataFrame, xCol: String, yCol: String,
       iters: Int = 3): DataFrame = {
     require(iters >= 1)
-    def t12l(x: Double): java.math.BigDecimal = {
-      val r = java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-      java.math.BigDecimal.valueOf(r)
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-    }
     val sp = df.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(xCol,
@@ -201,17 +191,14 @@ object Contingency {
       org.apache.spark.sql.types.StructField("fitted_r",
         org.apache.spark.sql.types.DoubleType)))
     val g = grid(df, xCol, yCol)
-    val rows = g.select(col(xCol), col(yCol), col("_o"), col("_n"),
-      col("_r"), col("_c")).collect()
+    // |X|·|Y| category universes, never rows
+    val rows = DriverLocal.collectOrFail(g.select(col(xCol), col(yCol),
+      col("_o"), col("_n"), col("_r"), col("_c")), "driverLocal.gridCap",
+      1 << 20, "ipfRaking's |X|·|Y| grid")
     if (rows.isEmpty)
       return sp.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         schema)
-    val cap = sp.conf.get("spark.graft.driverLocal.gridCap",
-      GridCap.toString).toInt
-    require(rows.length <= cap, s"ipfRaking grid has ${rows.length}" +
-      s" cells > cap $cap — the recursion is driver-local on the" +
-      " |X|·|Y| grid, which must stay bounded (not data-sized)")
     val n = rows.head.getLong(3)
     val (nr, nc) = (rows.head.getLong(4), rows.head.getLong(5))
     val (tr, tc) = (n.toDouble / nr.toDouble, n.toDouble / nc.toDouble)
@@ -222,7 +209,7 @@ object Contingency {
     for (_ <- 1 to iters) {
       val rs = xs.map { x =>
         var acc = java.math.BigDecimal.ZERO
-        ys.foreach(y => acc = acc.add(t12l(m((x, y)))))
+        ys.foreach(y => acc = acc.add(DriverLocal.t12(m((x, y)))))
         x -> acc.doubleValue
       }.toMap
       m = m.map { case ((x, y), v) =>
@@ -230,7 +217,7 @@ object Contingency {
       }
       val cs = ys.map { y =>
         var acc = java.math.BigDecimal.ZERO
-        xs.foreach(x => acc = acc.add(t12l(m((x, y)))))
+        xs.foreach(x => acc = acc.add(DriverLocal.t12(m((x, y)))))
         y -> acc.doubleValue
       }.toMap
       m = m.map { case ((x, y), v) =>
@@ -239,8 +226,7 @@ object Contingency {
     }
     val out = rows.map { r =>
       org.apache.spark.sql.Row(r.get(0), r.get(1), r.getLong(2),
-        java.math.BigDecimal.valueOf(m((r.get(0), r.get(1))))
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+        DriverLocal.r6(m((r.get(0), r.get(1)))))
     }
     sp.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }

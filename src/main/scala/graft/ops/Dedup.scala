@@ -558,21 +558,11 @@ object Dedup {
       .collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1), r.getBoolean(2),
         r.getLong(3)))
-    // non-finite guard (r14 ADVICE): BigDecimal.valueOf(NaN/Inf) throws
-    // NumberFormatException, whereas the relational round() this
-    // replaced passed non-finite doubles through. r12/r6 pass them
-    // through unchanged (Spark RoundBase behavior); a non-finite
-    // responsibility g poisons the EM trajectory to NaN exactly as the
-    // IEEE accumulation would (NaN in any term → every sum NaN).
-    def r12(x: Double): Double =
-      if (!java.lang.Double.isFinite(x)) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    // t12(double) as decimal(28,12): HALF_UP 12-dp round of the double,
-    // then the exact decimal of that value (Similarity.t12Local's form)
-    def t12d(x: Double): java.math.BigDecimal =
-      java.math.BigDecimal.valueOf(r12(x)).setScale(12,
-        java.math.RoundingMode.HALF_UP)
+    // r12/r6 pass non-finite doubles through (Spark RoundBase); a
+    // non-finite responsibility g poisons the EM trajectory to NaN
+    // exactly as the IEEE accumulation would (NaN in any term → every
+    // sum NaN), and t12 only ever sees finite values
+    import graft.util.DriverLocal.{r12, r6, t12}
     val nPairs = combos.map(_._4).sum
     var p = p0
     var m3v = Array(m0, m0, m0)
@@ -593,11 +583,11 @@ object Dedup {
         if (!java.lang.Double.isFinite(g)) poisoned = true
         if (!poisoned) {
           val c = java.math.BigDecimal.valueOf(cnt)
-          sg = sg.add(t12d(g).multiply(c))
+          sg = sg.add(t12(g).multiply(c))
           (0 until 3).foreach { j =>
             if (fs(j)) {
-              gs(j) = gs(j).add(t12d(g).multiply(c))
-              hs(j) = hs(j).add(t12d(1.0 - g).multiply(c))
+              gs(j) = gs(j).add(t12(g).multiply(c))
+              hs(j) = hs(j).add(t12(1.0 - g).multiply(c))
             }
           }
         }
@@ -617,10 +607,6 @@ object Dedup {
             !java.lang.Double.isFinite(v))) poisoned = true
       }
     }
-    def r6(x: Double): Double =
-      if (!java.lang.Double.isFinite(x)) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     def r6opt(cond: Boolean, x: => Double): Option[Double] =
       if (nPairs > 0 && cond) Some(r6(x)) else None
     val sp = docs.sparkSession
@@ -794,9 +780,8 @@ object Dedup {
     *
     * The cap is the session config `spark.graft.dedup.unionFindMaxEdges`
     * (default 2^20), so a deployment can move it per job without a code
-    * change; an explicit `smallGraphMaxEdges ≥ 0` wins (the sentinel −1
-    * reads the config). The task compares it with the distinct nodes it
-    * has seen, never more than the distinct directed edges, so a graph
+    * change. The task compares it with the distinct nodes it has seen,
+    * never more than the distinct directed edges, so a graph
     * within the cap in directed edges always stays on union-find, and
     * repeated pairs (the near-dup trunk emits one per shared LSH band)
     * do not move the switch. A `knownPairCount` (the caller counted
@@ -805,13 +790,9 @@ object Dedup {
     *
     * Both paths return the same (node, label) set (DedupSpec). */
   def nearDupComponents(pairs: DataFrame, maxIters: Int = 50,
-      smallGraphMaxEdges: Long = -1L,
       knownPairCount: Option[Long] = None): DataFrame = {
-    val maxEdges =
-      if (smallGraphMaxEdges >= 0L) smallGraphMaxEdges
-      else pairs.sparkSession.conf
-        .get("spark.graft.dedup.unionFindMaxEdges", (1L << 20).toString)
-        .toLong
+    val maxEdges = graft.util.DriverLocal.cap(pairs.sparkSession,
+      "dedup.unionFindMaxEdges", 1L << 20)
     if (knownPairCount.exists(_ * 2 > maxEdges))
       labelPropagation(pairs, maxIters)
     else {

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+import graft.util.DriverLocal.{dec12, r12, r6, t12}
+
 /** First-order Markov-chain journey analytics: the removal-effect
   * attribution model (Anderl et al. 2014, "Mapping the customer
   * journey") and the absorption profile (conversion probability +
@@ -91,63 +94,30 @@ object Markov {
       .agg(coalesce(sum(when(col("to_state") === convState, col("p"))
         .cast("decimal(28,12)")).cast("double"), lit(0.0)).as("c"))
 
-  /** Default cap on collected transition rows for the driver-local
-    * recursions: the journey-transition frame is |S|²-bounded (|S| =
-    * event-type universe, not corpus size), and the driver replay does
-    * O(iters·|S|³) decimal ops — 4096 rows ≈ a 64-state universe keeps
-    * that in the low millions. Conf-gated via
-    * `spark.graft.driverLocal.markovTransCap`; over-cap (or non-string
-    * / null states) falls back to the distributed recursion. */
-  val MarkovTransCap: Int = 1 << 12
-
-  /** Bounded collect of the (from_state, to_state, n) frame for the
-    * driver-local chain recursions. `limit(cap + 1)` bounds the
-    * collect itself (an over-cap chain costs one extra row, never a
-    * driver OOM). None — and thereby the distributed fallback — when
-    * the frame is over the cap, a state column is not a string, or any
-    * value is null (null-state semantics only the relational form
-    * defines). */
+  /** The (from_state, to_state, n) frame collected for the driver-local
+    * chain recursions. None — and thereby the distributed fallback —
+    * when the frame is over `spark.graft.driverLocal.markovTransCap`, a
+    * state column is not a string, or any value is null (null-state
+    * semantics only the relational form defines). */
   private def collectTrans(
       trans: DataFrame): Option[Array[(String, String, Long)]] = {
     import org.apache.spark.sql.types.StringType
-    val cap = trans.sparkSession.conf
-      .get("spark.graft.driverLocal.markovTransCap",
-        MarkovTransCap.toString).toInt
     val fields = trans.schema.fields
     if (fields.length < 3 || fields(0).dataType != StringType ||
         fields(1).dataType != StringType) return None
-    val rows = trans.limit(cap + 1).collect()
-    if (rows.length <= cap && rows.forall(r =>
+    // |S|² rows, O(iters·|S|³) decimal ops: 4096 ≈ a 64-state universe
+    DriverLocal.collectWithin(trans, "driverLocal.markovTransCap", 1 << 12)
+      .filter(_.forall(r =>
         !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)))
-      Some(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-    else None
+      .map(_.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
   }
-
-  /** Spark's Round(double, 12) replayed driver-side (RoundBase:
-    * BigDecimal.valueOf + HALF_UP; NaN/Infinity pass through). */
-  private def t12d(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Spark's Cast(double → DECIMAL(28,12)) replayed driver-side:
-    * BigDecimal(Double.toString(d)) re-scaled HALF_UP to 12. */
-  private def castDec12(x: Double): java.math.BigDecimal =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(12, java.math.RoundingMode.HALF_UP)
-
-  /** Spark's Round(double, 6) replayed driver-side. */
-  private def r6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Driver-local replay of one scenario's K-step absorption
     * recursion — call-for-call the [[step]]/[[convContrib]] pipeline:
-    * p = round(n/tot, 12); c(s) = Σ castDec12(p) over s→conv edges
+    * p = round(n/tot, 12); c(s) = Σ dec12(p) over s→conv edges
     * (exact decimal sum → double); v₁ = round(c, 12) (or round(1, 12)
     * for the expected-steps variant via `contrib`); each step sums
-    * castDec12(round(p·v, 12)) per target exactly and re-rounds
+    * dec12(round(p·v, 12)) per target exactly and re-rounds
     * v' = round(c + Σ, 12). Returns the v_K map keyed like c. */
   private def absorbLocal(edges: Array[(String, String, Double)],
       conv: String, iters: Int,
@@ -158,19 +128,19 @@ object Markov {
       val convEs = es.filter(_._2 == conv)
       s0 -> (if (convEs.isEmpty) 0.0
       else convEs.foldLeft(java.math.BigDecimal.ZERO) {
-        (acc, e) => acc.add(castDec12(e._3))
+        (acc, e) => acc.add(dec12(e._3))
       }.doubleValue())
     }
     val c = contrib(c0)
-    var v: Map[String, Double] = c.map { case (s0, x) => s0 -> t12d(x) }
+    var v: Map[String, Double] = c.map { case (s0, x) => s0 -> r12(x) }
     for (_ <- 2 to iters) {
       val prev = v
       v = c.map { case (s0, cs) =>
         var acc = java.math.BigDecimal.ZERO
         byFrom.getOrElse(s0, Array.empty).foreach { case (_, t, p) =>
-          prev.get(t).foreach(pv => acc = acc.add(castDec12(t12d(p * pv))))
+          prev.get(t).foreach(pv => acc = acc.add(t12(p * pv)))
         }
-        s0 -> t12d(cs + acc.doubleValue())
+        s0 -> r12(cs + acc.doubleValue())
       }
     }
     v
@@ -183,7 +153,7 @@ object Markov {
     val tot: Map[String, Long] =
       ts.groupBy(_._1).map { case (s0, rs) => s0 -> rs.map(_._3).sum }
     ts.map { case (f, t, n) =>
-      (f, t, t12d(n.toDouble / tot(f).toDouble)) }
+      (f, t, r12(n.toDouble / tot(f).toDouble)) }
   }
 
   /** Removal-effect attribution: for each non-START transient state r,
@@ -246,12 +216,12 @@ object Markov {
       scens.map(r => r -> vK(Some(r)).getOrElse("START", 0.0))
     val re: Seq[(String, Double, Option[Double])] = pr.map {
       case (r, x) =>
-        (r, x, if (pf > 0) Some(t12d(1.0 - x / pf)) else None)
+        (r, x, if (pf > 0) Some(r12(1.0 - x / pf)) else None)
     }
     val reVals = re.flatMap(_._3)
     val tot: Option[Double] = if (reVals.isEmpty) None
     else Some(reVals.foldLeft(java.math.BigDecimal.ZERO) {
-      (acc, x) => acc.add(castDec12(x))
+      (acc, x) => acc.add(dec12(x))
     }.doubleValue())
     frame(re.map { case (r, x, reo) =>
       org.apache.spark.sql.Row(r, r6(pf), r6(x),
@@ -311,7 +281,7 @@ object Markov {
     * t = 1 + Σ_transient p·t — "how likely does a session here
     * convert, and how long does it keep going". Same bounded
     * recursion; both columns from one transition frame. Runs
-    * DRIVER-LOCAL behind the [[MarkovTransCap]] valve exactly like
+    * DRIVER-LOCAL behind the `driverLocal.markovTransCap` valve like
     * [[removalAttribution]] (parity-test-pinned); the distributed
     * per-step join chain is the over-valve fallback. */
   def absorptionProfile(trans: DataFrame, convState: String,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+
 /** Data-quality profiling: per-column statistics, fixed-width value
   * histograms, and robust per-group outlier flagging — the inspection
   * pass a curation pipeline runs before anything trains on a corpus.
@@ -576,8 +578,8 @@ object Profile {
     * product, identical in any engine. */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
       idCol: String, bandWidth: Double, k: Double = 3.0): DataFrame = {
-    val cap = df.sparkSession.conf
-      .get("spark.graft.profile.histQuantileMaxDistinct", "4194304").toLong
+    val cap = DriverLocal.cap(df.sparkSession,
+      "profile.histQuantileMaxDistinct", 4194304L)
     // one corpus pass; |groups × distinct values| rows, consumed by the
     // valve probe, the median pass and the deviation grid
     val hist = df.groupBy(col(groupCol), col(valueCol))
@@ -897,40 +899,28 @@ object Profile {
     * exact.
     *
     * Shape (r15): the grain is collected behind
-    * `spark.graft.driverLocal.snGrainCap` (default 2¹³;
-    * `limit(cap+1)` bounds the collect) and both order statistics are
-    * selected DRIVER-LOCAL over the same exact-integer differences —
-    * the former grain² self-join + per-i rank window + global window
-    * were pure fixed cost at bounded grain. Over the cap, or if any
-    * id/value is null (null ids pair with nothing and null values
-    * propagate through the rank — semantics only the relational form
-    * defines), the pre-r15 distributed shape runs instead; a parity
-    * test pins the two paths row-for-row. Returns one row: n, sn_raw
-    * (exact integer, input units), sn_r = round(1.1926 · sn_raw, 6).
-    * Empty for n < 2 (no pairs — scale is undefined on a single
-    * observation). */
+    * `spark.graft.driverLocal.snGrainCap` (default 2¹³) and both order
+    * statistics are selected DRIVER-LOCAL over the same exact-integer
+    * differences — the former grain² self-join + per-i rank window + global
+    * window were pure fixed cost at bounded grain. Over the cap, or if any
+    * id/value is null (null ids pair with nothing and null values propagate
+    * through the rank — semantics only the relational form defines), the
+    * pre-r15 distributed shape runs instead; a parity test pins the two
+    * paths row-for-row. Returns one row: n, sn_raw (exact integer, input
+    * units), sn_r = round(1.1926 · sn_raw, 6). Empty for n < 2 (no pairs —
+    * scale is undefined on a single observation). */
   def snScale(df: DataFrame, idCol: String, valueCol: String): DataFrame = {
     val sp = df.sparkSession
     val v = df.select(col(idCol).as("_i"),
       col(valueCol).cast("long").as("_x"))
-    val cap = sp.conf.get("spark.graft.driverLocal.snGrainCap",
-      SnGrainCap.toString).toInt
-    // limit(cap + 1) bounds the collect: an over-cap grain costs one
-    // extra row, never a driver OOM, and falls back distributed
-    val rows = v.limit(cap + 1).collect()
-    if (rows.length <= cap &&
-        rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-      snScaleLocal(sp, rows.map(r => (r.get(0), r.getLong(1))))
-    else snScaleDistributed(v)
+    // O(n² log n) driver comparisons: 2¹³ rows ≈ 67M, under a second
+    DriverLocal.collectWithin(v, "driverLocal.snGrainCap", 1 << 13)
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) match {
+      case Some(rows) =>
+        snScaleLocal(sp, rows.map(r => (r.get(0), r.getLong(1))))
+      case None => snScaleDistributed(v)
+    }
   }
-
-  /** Default cap on collected grain rows for the driver-local Sn
-    * selection: the driver does O(n² log n) comparisons over n longs,
-    * so the cap bounds CPU, not just memory (2¹³ ≈ 8k rows → 67M
-    * comparisons, well under a second; a calendar-day grain is ~2.5k
-    * at any corpus size). Conf-gated via
-    * `spark.graft.driverLocal.snGrainCap`. */
-  val SnGrainCap: Int = 1 << 13
 
   /** Driver-local Sn selection — value-identical to
     * [[snScaleDistributed]]: same pair universe (partners with a
@@ -977,8 +967,7 @@ object Profile {
     val arr = hms.toArray
     java.util.Arrays.sort(arr)
     val snRaw = arr(k2 - 1)
-    val snR = java.math.BigDecimal.valueOf(1.1926 * snRaw.toDouble)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val snR = DriverLocal.r6(1.1926 * snRaw.toDouble)
     frame(Seq(org.apache.spark.sql.Row(n.toLong, snRaw, snR)))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expr.VectorKernels.cosine_sim
+import graft.util.DriverLocal
 
 /** Similarity search over an `array<float>` embedding column
   * (builder north star; SURVEY.md §2.12).
@@ -32,8 +33,8 @@ object Similarity {
     * a few hundred MB of id+vector, inside Spark's 8 GB broadcast
     * hard cap for typical dims). */
   private def broadcastMaxQueries(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get("spark.graft.similarity.broadcastMaxQueries", "1000000").toLong
+    DriverLocal.cap(df.sparkSession, "similarity.broadcastMaxQueries",
+      1000000L)
 
   /** Exact cosine top-k: for each query row, the k nearest non-self
     * vectors. `queries` must fit the broadcast valve
@@ -156,8 +157,6 @@ object Similarity {
     * defined cosine dropped). */
   def assignCells(collection: DataFrame, centroids: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    val cap = collection.sparkSession.conf
-      .get("spark.graft.similarity.maxLiteralCentroids", "65536").toInt
     val centSel = centroids
       .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
     val typed = centSel.schema("cid").dataType == LongType &&
@@ -165,25 +164,28 @@ object Similarity {
         case ArrayType(FloatType, _) => true
         case _ => false
       })
-    // limit(cap + 1) bounds the collect itself: an over-cap centroid
-    // set costs one extra row, never a driver OOM
-    val rows = if (typed) centSel.limit(cap + 1).collect() else null
-    if (typed && rows.length <= cap) {
-      val cents: Seq[(Long, Seq[Float])] = rows.toSeq
-        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        .map { r =>
-          // null array elements read as 0.0f in the unsafe row format
-          // the cosine kernel saw on the crossJoin path — keep that
-          val e = r.getSeq[java.lang.Float](1)
-            .map(f => if (f == null) 0.0f else f.floatValue()).toSeq
-          (r.getLong(0), e)
-        }
-      collection
-        .withColumn("cid", graft.expr.NearestCentroid
-          .nearest_centroid(col("embedding"), cents))
-        .filter(col("cid").isNotNull)
-        .select(col("vec_id"), col("embedding"), col("cid"))
-    } else assignCellsExploded(collection, centroids)
+    // 65536 centroids ≈ 16 MB of floats at dim 64: a plan constant
+    val literal = if (!typed) None
+      else DriverLocal.collectWithin(centSel,
+        "similarity.maxLiteralCentroids", 65536)
+    literal match {
+      case Some(rows) =>
+        val cents: Seq[(Long, Seq[Float])] = rows.toSeq
+          .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+          .map { r =>
+            // null array elements read as 0.0f in the unsafe row format
+            // the cosine kernel saw on the crossJoin path — keep that
+            val e = r.getSeq[java.lang.Float](1)
+              .map(f => if (f == null) 0.0f else f.floatValue()).toSeq
+            (r.getLong(0), e)
+          }
+        collection
+          .withColumn("cid", graft.expr.NearestCentroid
+            .nearest_centroid(col("embedding"), cents))
+          .filter(col("cid").isNotNull)
+          .select(col("vec_id"), col("embedding"), col("cid"))
+      case None => assignCellsExploded(collection, centroids)
+    }
   }
 
   /** The pre-r15 assignment shape, kept as the over-valve fallback:
@@ -817,61 +819,31 @@ object Similarity {
     val sp = collection.sparkSession
     import sp.implicits._
     val (v, lam) = powerIterLocal(collectMoment(collection), iters)
-    val lamR = round6Local(lam)
-    v.map { case (j, vj) => (j, round6Local(vj), lamR) }.toSeq
+    val lamR = DriverLocal.r6(lam)
+    v.map { case (j, vj) => (j, DriverLocal.r6(vj), lamR) }.toSeq
       .toDF("j", "loading_r", "lambda_r")
   }
-
-  /** Spark's `round(col, 12).cast("decimal(28,12)")` pipeline replayed
-    * on the driver, call for call: Round(double) goes through the
-    * shortest-repr `BigDecimal.valueOf(double)` then HALF_UP setScale
-    * back to double, and the Cast re-parses THAT rounded double the
-    * same way — two steps, not one, because the decimal→double→decimal
-    * round-trip is itself part of the trajectory both engines walk. */
-  private def t12Local(x: Double): java.math.BigDecimal = {
-    val r = java.math.BigDecimal.valueOf(x)
-      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    java.math.BigDecimal.valueOf(r)
-      .setScale(12, java.math.RoundingMode.HALF_UP)
-  }
-
-  /** Spark's `round(col, 6)` on a double, replayed on the driver. */
-  private def round6Local(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The ONE data-sized pass of the eigen family, collected: d² rows,
     * bounded by the embedding dimension (64² = 4096 here; ≤ 1M even at
     * d = 1024), never by the corpus — the MLlib posture
     * (RowMatrix.computePrincipalComponents collects the Gramian and
-    * eigensolves locally). This collect is deliberate and scale-safe:
-    * at 100 TB the matrix is still d². */
+    * eigensolves locally). Over `spark.graft.driverLocal.momentCap`
+    * entries it fails loudly instead of exhausting the driver. */
   private def collectMoment(collection: DataFrame)
-      : Array[(Int, Int, Double)] = {
-    val rows = secondMomentMatrix(collection).collect()
-    val cap = collection.sparkSession.conf.get(
-      "spark.graft.driverLocal.momentCap", MomentCap.toString).toInt
-    require(rows.length <= cap, s"moment matrix has ${rows.length}" +
-      s" entries > cap $cap — the eigen recursion is driver-local" +
-      " on the d² Gramian, which must stay dimension-bounded (not" +
-      " data-sized)")
-    rows.map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-  }
-
-  /** Default cap on collected moment-matrix entries for the
-    * driver-local eigen recursions: d² by contract (embedding
-    * dimension, never rows) — 2048² headroom; an unbounded caller
-    * fails loudly here instead of OOMing the driver. Conf-gated via
-    * `spark.graft.driverLocal.momentCap`. */
-  val MomentCap: Int = 1 << 22
+      : Array[(Int, Int, Double)] =
+    // d² entries by contract: 2048² headroom, never rows
+    DriverLocal.collectOrFail(secondMomentMatrix(collection),
+      "driverLocal.momentCap", 1 << 22, "the d² moment matrix")
+      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
 
   /** Driver-local power iteration over the collected moment matrix —
     * the round-13 replacement for the per-step localCheckpoint chain
     * (each step was a d-row broadcast join whose ~0.35 s checkpoint
     * floor dominated the family's wall time; 12+ steps of pure fixed
     * cost). The trajectory is BIT-IDENTICAL to the distributed form:
-    * every product is 12-dp-rounded through [[t12Local]] (the exact
-    * Round+Cast calls Spark codegen executes), partial sums are exact
+    * every product is 12-dp-rounded through [[DriverLocal.t12]] (the
+    * exact Round+Cast calls Spark codegen executes), partial sums are exact
     * decimals (order-independent), norms/divisions are the same IEEE
     * doubles — so the DuckDB oracle's unrolled 12-dp CTE chain sees
     * the same values it always did. Returns (sorted (j, v_j), λ). */
@@ -885,7 +857,8 @@ object Similarity {
       byJ.map { case (j, rows) =>
         var acc = java.math.BigDecimal.ZERO
         rows.foreach { case (_, k, mjk) =>
-          vec.get(k).foreach(vk => acc = acc.add(t12Local(mjk * vk)))
+          vec.get(k).foreach(vk =>
+            acc = acc.add(DriverLocal.t12(mjk * vk)))
         }
         j -> acc.doubleValue
       }
@@ -893,14 +866,15 @@ object Similarity {
     for (_ <- 1 to iters) {
       u = mv(v)
       var nacc = java.math.BigDecimal.ZERO
-      u.valuesIterator.foreach(uj => nacc = nacc.add(t12Local(uj * uj)))
+      u.valuesIterator.foreach(uj =>
+        nacc = nacc.add(DriverLocal.t12(uj * uj)))
       val nrm = math.sqrt(nacc.doubleValue)
       v = u.map { case (j, uj) => j -> uj / nrm }
     }
     val uf = mv(v)
     var lacc = java.math.BigDecimal.ZERO
     v.foreach { case (j, vj) =>
-      uf.get(j).foreach(ufj => lacc = lacc.add(t12Local(vj * ufj)))
+      uf.get(j).foreach(ufj => lacc = lacc.add(DriverLocal.t12(vj * ufj)))
     }
     (dims.map(j => j -> v(j)), lacc.doubleValue)
   }
@@ -1037,12 +1011,12 @@ object Similarity {
     val v2m = v2.toMap
     var dacc = java.math.BigDecimal.ZERO
     v1.foreach { case (j, a) =>
-      v2m.get(j).foreach(b => dacc = dacc.add(t12Local(a * b)))
+      v2m.get(j).foreach(b => dacc = dacc.add(DriverLocal.t12(a * b)))
     }
-    val (l1R, l2R, dotR) =
-      (round6Local(lam1), round6Local(lam2), round6Local(dacc.doubleValue))
+    val (l1R, l2R, dotR) = (DriverLocal.r6(lam1), DriverLocal.r6(lam2),
+      DriverLocal.r6(dacc.doubleValue))
     v1.map { case (j, a) =>
-      (j, round6Local(a), round6Local(v2m(j)), l1R, l2R, dotR)
+      (j, DriverLocal.r6(a), DriverLocal.r6(v2m(j)), l1R, l2R, dotR)
     }.toSeq.toDF("j", "loading1_r", "loading2_r", "lambda1_r",
       "lambda2_r", "dot12_r")
   }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+
 /** Text-analysis operators for the LLM-data-pipeline surface
   * (SURVEY.md §2.12 / builder north star): normalization, tokenization,
   * token stats, language-ID heuristic, quality scoring, fingerprinting.
@@ -857,9 +859,9 @@ object TextOps {
     * (the bradleyTerry/topEigen posture — the former per-step
     * localCheckpoint chain paid ~0.2 s/step of pure fixed cost) behind
     * an edge-count valve (`spark.graft.driverLocal.textrankEdgeCap`,
-    * default 2²⁰; `limit(cap+1)` bounds the collect itself). Above the
-    * valve the distributed per-step loop runs instead — both paths
-    * walk the same trajectory: each fan-in term r_i·w_ij/outw_i is
+    * default 2²⁰). Above the valve the distributed per-step loop runs
+    * instead — both paths walk the same trajectory: each fan-in term
+    * r_i·w_ij/outw_i is
     * 12-dp-rounded onto DECIMAL(28,12) before its order-independent
     * sum (hub tokens aggregate thousands of terms — a raw double sum
     * would be order-sensitive there), and the driver replay executes
@@ -886,15 +888,14 @@ object TextOps {
         col("_term").as("_dst")))
       .groupBy(col("_src"), col("_dst"))
       .agg(count(lit(1)).as("_w"))
-    val cap = sp.conf.get("spark.graft.driverLocal.textrankEdgeCap",
-      TextrankEdgeCap.toString).toInt
-    // limit(cap + 1) bounds the collect: an over-cap graph costs one
-    // extra row, never a driver OOM, and falls back distributed
-    val eRows = edges.limit(cap + 1).collect()
-    val scored: DataFrame = if (eRows.length <= cap) {
-      textRankLocal(sp, eRows.map(r =>
+    // the graph is vocab-bounded, but vocab grows with data: a fallback,
+    // not a loud failure
+    val scored: DataFrame = DriverLocal.collectWithin(edges,
+        "driverLocal.textrankEdgeCap", 1 << 20) match {
+      case Some(es) => textRankLocal(sp, es.map(r =>
         (r.getString(0), r.getString(1), r.getLong(2))), iters, damping)
-    } else textRankDistributed(edges, iters, damping)
+      case None => textRankDistributed(edges, iters, damping)
+    }
     scored.orderBy(col("_r").desc, col("_term")).limit(topK)
       .select(col("_term").as("term"), round(col("_r"), 9).as("score_r"))
       .withColumn("rn", row_number().over(org.apache.spark.sql
@@ -902,30 +903,15 @@ object TextOps {
       .select(col("rn"), col("term"), col("score_r"))
   }
 
-  /** Default cap on collected TextRank edges for the driver-local
-    * recursion: the co-occurrence graph is vocab-bounded, not
-    * corpus-bounded, but vocab itself grows with data — so unlike the
-    * bradleyTerry item universe this valve has a distributed FALLBACK
-    * rather than a loud failure. Conf-gated via
-    * `spark.graft.driverLocal.textrankEdgeCap`. */
-  val TextrankEdgeCap: Int = 1 << 20
-
   /** Driver-local weighted-PageRank trajectory on the collected edge
     * list — bit-identical to [[textRankDistributed]]: every fan-in term
     * is rounded through the exact Round(12)+Cast(decimal(28,12)) pipeline
-    * Spark codegen executes ([[graft.ops.Choice.bradleyTerry]]'s t12
-    * replay), partial sums are exact decimals (order-independent), and
-    * the per-step rank expression is the same left-associated double
+    * Spark codegen executes ([[DriverLocal.t12]]), partial sums are
+    * exact decimals (order-independent), and the per-step rank expression is the same left-associated double
     * arithmetic. Returns a |vocab|-row (_term, _r) frame. */
   private def textRankLocal(sp: org.apache.spark.sql.SparkSession,
       es: Array[(String, String, Long)], iters: Int,
       damping: Double): DataFrame = {
-    def t12l(x: Double): java.math.BigDecimal = {
-      val r = java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-      java.math.BigDecimal.valueOf(r)
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-    }
     val outw: Map[String, Long] =
       es.groupBy(_._1).map { case (s0, rs) => s0 -> rs.map(_._3).sum }
     val nD = outw.size.toDouble
@@ -936,7 +922,8 @@ object TextOps {
       r = byDst.map { case (dst, rs) =>
         var acc = java.math.BigDecimal.ZERO
         rs.foreach { case (s0, _, w0) =>
-          acc = acc.add(t12l(prev(s0) * w0.toDouble / outw(s0).toDouble))
+          acc = acc.add(
+            DriverLocal.t12(prev(s0) * w0.toDouble / outw(s0).toDouble))
         }
         dst -> ((1.0 - damping) / nD + damping * acc.doubleValue)
       }

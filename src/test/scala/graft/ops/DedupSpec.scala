@@ -7,6 +7,14 @@ import graft.SparkTestBase
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** `body` with the union-find edge cap set to `cap` (0 forces the
+    * propagation path, Long.MaxValue the union-find path). */
+  private def withUnionFindCap[T](cap: Long)(body: => T): T = {
+    val key = "spark.graft.dedup.unionFindMaxEdges"
+    spark.conf.set(key, cap.toString)
+    try body finally spark.conf.unset(key)
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "the quick brown fox jumps over the lazy dog"),   // exact dup of 1
@@ -96,10 +104,10 @@ class DedupSpec extends SparkTestBase {
       "(fixpoint loop path)") {
     // 1-2-3-...-11: diameter 10 — a fixed 5-round propagation would split
     // this into multiple keepers; the fixpoint loop must not.
-    // smallGraphMaxEdges=0 forces the large-graph propagation path.
+    // a union-find cap of 0 forces the large-graph propagation path.
     val pairs = (1L to 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = Dedup.nearDupComponents(pairs, smallGraphMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = withUnionFindCap(0)(Dedup.nearDupComponents(pairs)
+      .collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 11)
     assert(labels.values.toSet == Set(1L),
       s"every node must carry the chain minimum, got $labels")
@@ -118,8 +126,8 @@ class DedupSpec extends SparkTestBase {
       (30L, 40L), (100L, 7L), (100L, 8L), (100L, 9L), (55L, 44L)))
       .toDF("doc_a", "doc_b")
     def run(small: Long) =
-      Dedup.nearDupComponents(pairs, smallGraphMaxEdges = small)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      withUnionFindCap(small)(Dedup.nearDupComponents(pairs).collect())
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val unionFind = run(Long.MaxValue)
     val propagation = run(0)
     assert(unionFind == propagation)
@@ -144,12 +152,6 @@ class DedupSpec extends SparkTestBase {
       val viaUnionFind = Dedup.nearDupComponents(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaUnionFind == want, viaUnionFind.toString)
-      // an explicit argument wins over the session config
-      spark.conf.set(key, "0")
-      val explicitArg = Dedup.nearDupComponents(pairs,
-          smallGraphMaxEdges = Long.MaxValue).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(explicitArg == want, explicitArg.toString)
     } finally spark.conf.unset(key)
   }
 
@@ -221,8 +223,8 @@ class DedupSpec extends SparkTestBase {
     assert(labels(Dedup.nearDupComponents(pairs,
       knownPairCount = Some(3L))) == expected)
     // known count, above the small-graph gate → propagation path
-    assert(labels(Dedup.nearDupComponents(pairs, smallGraphMaxEdges = 0,
-      knownPairCount = Some(3L))) == expected)
+    assert(withUnionFindCap(0)(labels(Dedup.nearDupComponents(pairs,
+      knownPairCount = Some(3L)))) == expected)
   }
 
   test("simhashNearDups pigeonhole property (fixed seed): EVERY pair " +
@@ -703,30 +705,15 @@ class DedupSpec extends SparkTestBase {
       } finally spark.conf.unset(key)
     }
     val pairs = Dedup.simhashNearDups(parityDocs, "doc_id", "text", 3)
-    assert(pairSet(Dedup.nearDupComponents(pairs, smallGraphMaxEdges = 0)) ==
+    assert(withUnionFindCap(0)(pairSet(Dedup.nearDupComponents(pairs))) ==
       pairSet(Dedup.nearDupComponents(pairs)))
   }
 
   test("near-dup removal runs a fixed handful of Spark jobs") {
-    val sc = spark.sparkContext
-    val group = "neardup-job-pin"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "near-dup job pin")
-      try Dedup.nearDupRemovals(parityDocs, "doc_id", "text", 0.5).collect()
-      finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    info(s"jobs: ${jobs.get}")
-    assert(jobs.get > 0 && jobs.get <= 7, s"${jobs.get} jobs (5 measured)")
+    val jobs = jobCount(
+      Dedup.nearDupRemovals(parityDocs, "doc_id", "text", 0.5).collect())
+    info(s"jobs: $jobs")
+    assert(jobs > 0 && jobs <= 7, s"$jobs jobs (5 measured)")
   }
 
   test("near-dup trunk leaves no cache entry and writes no spark.graft conf") {

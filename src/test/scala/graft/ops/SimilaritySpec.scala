@@ -122,6 +122,14 @@ class SimilaritySpec extends SparkTestBase {
     } finally spark.conf.unset(key)
   }
 
+  test("assignCells: the literal path's centroid collect adds no job") {
+    val cents = emb.filter(col("vec_id") < 8)
+    val jobs = jobCount(Similarity.assignCells(emb, cents).collect())
+    info(s"jobs: $jobs")
+    assert(jobs == 2,
+      s"$jobs jobs (2 before the valve moved onto DriverLocal)")
+  }
+
   test("centroidUpdate: per-cell dimension means over the assignment") {
     import spark.implicits._
     val cents = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f)))

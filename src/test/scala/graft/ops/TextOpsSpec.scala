@@ -639,6 +639,18 @@ class TextOpsSpec extends SparkTestBase {
     assert(local.nonEmpty)
   }
 
+  test("textRank: the driver-local path's edge collect adds no job") {
+    val docs = Seq(
+      (1L, "alpha beta alpha gamma delta alpha"),
+      (2L, "ab alpha beta gamma gamma beta"),
+      (3L, "delta epsilon alpha beta zeta")).toDF("doc_id", "text")
+    val jobs = jobCount(TextOps.textRank(docs, "doc_id", "text", iters = 4,
+      damping = 0.85, minLen = 4, topK = 10).collect())
+    info(s"jobs: $jobs")
+    assert(jobs == 6,
+      s"$jobs jobs (6 before the valve moved onto DriverLocal)")
+  }
+
   test("bpeTrain: merge sequence on a hand vocab, lexicographic " +
       "ties, and the documented left-to-right run semantics") {
     import spark.implicits._
